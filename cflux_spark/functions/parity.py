@@ -71,25 +71,17 @@ def unfix(expr: Column) -> Column:
 _LN2_LITERAL = "0.6931471805599453E0"
 
 
-def portable_ln_ratio(a: str, b: str) -> str:
-    """SQL text computing ln(``a``/``b``) for POSITIVE INTEGER (≤ 2^53)
+def portable_ln_ratio_steps(
+    a: str, b: str, prefix: str = "_pl"
+) -> tuple[list[tuple[str, str]], str]:
+    """SQL computing ln(``a``/``b``) for POSITIVE INTEGER (≤ 2^53)
     expressions ``a``, ``b`` using ONLY operations IEEE 754 defines as
     correctly rounded (int shifts/compares, int→double casts, double
     + − × ÷) — so Spark and DuckDB evaluate it to the BIT-IDENTICAL
-    double, independent of either engine's libm.
-
-    Why this exists (round 13, VERDICT r12 item 1): every rounding
-    margin in the q_quality_classifier pipeline measured ≥ 7e-11 —
-    orders above a correctly-rounded libm's ≤ 1-2 ulp variance — yet
-    the driver environment flipped the query's hash in three straight
-    rounds. The classifier is the ONE catalog query whose hashed float
-    (log_odds = Σ cnt·w_fixed / 1e6) carries its transcendental
-    call-sites' integer quanta UNROUNDED into the output, so it alone
-    is exposed to a libm whose ln strays further than ours (every
-    other query's 4-6 dp output rounding absorbs call-site flips).
-    Building the 259 weight/prior ln values from basic ops removes the
-    engine-libm from the lineage entirely: zero flip channel instead
-    of a small one.
+    double, independent of either engine's libm (the
+    q_quality_classifier weights carry their ln quanta unrounded into
+    a hashed output, so a libm that strays further than ours would
+    flip its hash).
 
     Method: exact range reduction, then the atanh series.
 
@@ -99,26 +91,7 @@ def portable_ln_ratio(a: str, b: str) -> str:
         ln m = 2z·(1 + z²/3 + z⁴/5 + … + z¹⁸/19)   (tail < 3e-16)
         ln(a/b) = ln m + k·ln2                     (ln2 a shared literal)
 
-    Absolute error vs true ln ≤ ~1e-15 — five orders under the
-    smallest realized weight margin, so switching an existing libm
-    call site to this form is value-preserving (verified bit-exact at
-    sf0.001/0.01/0.1); and both engines agree by construction because
-    every op in the tree is correctly rounded and the tree is
-    identical text."""
-    steps, out = portable_ln_ratio_steps(a, b)
-    # fold the step chain into one expression via textual substitution
-    # INNERMOST-FIRST; steps reference each other at most once apiece
-    # except z2 (bounded: the Horner chain names z2, not its body)
-    expr = out
-    for name, body in reversed(steps):
-        expr = expr.replace(name, body)
-    return expr
-
-
-def portable_ln_ratio_steps(
-    a: str, b: str, prefix: str = "_pl"
-) -> tuple[list[tuple[str, str]], str]:
-    """The step-chain form of :func:`portable_ln_ratio`: returns
+    Absolute error vs true ln ≤ ~1e-15. Returns
     (steps, result_expr) where ``steps`` is an ordered list of
     (column_name, sql_expr) — each expr references only ``a``/``b``
     and EARLIER step names — and ``result_expr`` references the last

@@ -1384,6 +1384,88 @@ def _bucket_ms(bucket_s: float, offset_s: float = 0.0, tz: str | None = None, sr
     return F.expr(f"ts_ns div {bucket_ns}") * bucket_ms
 
 
+class _SelectPlan(NamedTuple):
+    """One result frame of a SELECT — rows ``[*tkeys, ts_ms, _v0.._vN]``,
+    ordered and sliced — with what a drain needs to cut them into
+    InfluxDB series: the series name, the GROUP BY tags behind
+    ``tkeys``, and the value column names."""
+
+    frame: DataFrame
+    name: str
+    gtags: list[str]
+    tkeys: list[str]
+    columns: list[str]
+
+
+def _series_key() -> Column:
+    """Field-independent series key of a registry row: a hash of its
+    sorted tag entries. Rows are stored one per field and fingerprints
+    include the field name, so (series key, ts) is the cross-field
+    POINT identity."""
+    return F.xxhash64(
+        F.to_json(F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map()))))
+    )
+
+
+def _is_raw(sp: FieldSpec) -> bool:
+    """A raw point field or raw arithmetic over fields (``user * 2``)
+    — not aggregated, not transformed."""
+    return (
+        sp.agg is None
+        and sp.tx is None
+        and (sp.expr is None or not _arith_leaves(sp.expr, "agg"))
+    )
+
+
+def _is_pointwise(sp: FieldSpec) -> bool:
+    """A value computed from ONE point: a raw field, raw arithmetic,
+    or a math function over a raw field (``abs(user)``)."""
+    return _is_raw(sp) or (sp.agg is None and sp.expr is None and sp.tx in _MATH_FNS)
+
+
+def _spec_colname(stmt: SelectStmt, spec: FieldSpec, multi: bool) -> str:
+    """Output column of a SELECT expression over a measurement: the
+    alias; else the field (or expression text) for raw points; else
+    the function name, suffixed ``_<field>`` in multi-field
+    statements (InfluxDB 1.x naming; a raw field under GROUP BY time
+    is the reference's default mean)."""
+    if spec.alias:
+        return spec.alias
+    if spec.expr is not None:
+        return spec.name
+    fn = spec.tx or spec.agg
+    if fn is None:
+        if stmt.group_by_time_s is None:
+            return spec.name
+        fn = "mean"
+    fn = _DISPLAY.get(fn, fn)
+    return f"{fn}_{spec.name}" if multi else fn
+
+
+def _output_col(colmap: dict[str, str], name: str) -> str:
+    """The frame column of subquery output ``name``; loud when the
+    subquery has no such output."""
+    if name not in colmap:
+        raise InfluxQLError(
+            f"field {name!r} does not match subquery output "
+            f"{sorted(colmap) if len(colmap) > 1 else repr(next(iter(colmap)))}"
+        )
+    return colmap[name]
+
+
+def _regex_measurements(stmt: SelectStmt, reg: DataFrame | None) -> list[str]:
+    """Measurements a ``FROM /regex/`` statement reads, from the
+    (small) registry, sorted."""
+    if reg is None:
+        return []
+    pat = re.compile(stmt.measurement_regex)
+    return sorted(
+        r.measurement
+        for r in reg.select("measurement").distinct().collect()
+        if pat.search(r.measurement)
+    )
+
+
 class InfluxQLEngine:
     """Executes the statement surface against LPStore-backed databases."""
 
@@ -2027,16 +2109,16 @@ class InfluxQLEngine:
 
     def execute_chunked(self, q: str, db: str | None = None, chunk_size: int = 10_000):
         """Generator of result envelopes (InfluxDB ``chunked=true``
-        semantics): raw-point SELECTs stream through
-        ``toLocalIterator()`` in chunks of ``chunk_size`` rows — driver
-        memory is O(chunk_size) no matter how large the result, and the
-        ``max_result_rows`` guard does not apply (streaming IS the
-        unbounded-result path, done safely). GROUP BY time(N)
-        aggregates stream too (round 4 — a huge-cardinality grouped
-        result is as unbounded as raw points). Non-chunkable
-        statements (selectors/distinct/elapsed, SHOW, subqueries,
-        SLIMIT — small or needing whole-result context) fall back to
-        one ordinary envelope.
+        semantics). A SELECT plans exactly as under :meth:`execute`
+        (:meth:`_plan_select` — same frames, same merged columns, same
+        LIMIT/OFFSET); only the drain differs: rows stream through
+        ``toLocalIterator()`` in chunks of ``chunk_size``, so driver
+        memory is O(chunk_size) no matter how large the result, and
+        the ``max_result_rows`` guard does not apply (streaming IS the
+        unbounded-result path, done safely). SLIMIT/SOFFSET (which
+        slice the whole series list), INTO (a written-count result),
+        EXPLAIN, SHOW and multi-statement queries answer with one
+        ordinary envelope.
 
         The reference streams ClickHouse rows the same way
         (row-at-a-time into the response pivot, cflux.js:792-810); this
@@ -2044,337 +2126,46 @@ class InfluxQLEngine:
         contract: every yielded envelope except the last carries
         ``partial: true`` (InfluxDB chunked-response shape)."""
         stmts = _split_statements(q)
-        if len(stmts) == 1 and stmts[0].strip().upper().startswith("EXPLAIN"):
-            # EXPLAIN under chunked=true shows the chunked dispatch's
-            # own per-spec frames (round 10)
-            yield self._explain_chunked(stmts[0].strip(), db, max(1, int(chunk_size)))
-            return
         if len(stmts) == 1 and stmts[0].strip().upper().startswith("SELECT"):
-            try:
-                stmt = parse_select(stmts[0].strip())
-            except InfluxQLError:
-                stmt = None
-            if (
-                stmt is not None
-                and stmt.into is None  # INTO writes; its result is a
-                # 1-row written-count envelope — nothing to chunk
-                # (round 10: the chunked dispatch used to silently
-                # drop the INTO clause and stream the rows instead)
-                and stmt.measurement_regex is None
-                and not stmt.slimit
-                and not stmt.soffset
-            ):
-                if stmt.subquery is not None:
-                    # subquery statements stream too (round 7; round 8
-                    # extended to multi-field and wildcard outer
-                    # selects): raw re-selection of the subquery's
-                    # output (the HAVING idiom over years of buckets)
-                    # is as unbounded as a raw select; multi-field
-                    # outers stream ONE bucket-aligned merged frame
-                    # (per-spec frames full-outer-joined on
-                    # (series key, bucket) — the _select_agg_chunked
-                    # shape, fully distributed).
-                    yield from self._select_subquery_chunked(
-                        stmt, db, max(1, int(chunk_size))
-                    )
-                    return
-                elif stmt.group_by_time_s is None and all(
-                    sp.agg is None and sp.tx is None and sp.expr is None
-                    for sp in stmt.fields
-                ):
-                    yield from self._select_raw_chunked(stmt, db, max(1, int(chunk_size)))
-                    return
-                if (
-                    stmt.subquery is None
-                    and len(stmt.fields) == 1
-                    and stmt.fields[0].agg in (*_SEL_FNS, "distinct", "elapsed")
-                    and stmt.fields[0].expr is None
-                    and stmt.fields[0].tx is None
-                    and not stmt.fields[0].tag
-                    and stmt.fields[0].name != "*"
-                ):
-                    # selectors/distinct/elapsed stream too (round 7 —
-                    # previously single-envelope fallback): top(f,N)
-                    # per bucket over years, distinct over a
-                    # high-cardinality field, and elapsed (per-point)
-                    # are all as unbounded as raw selects. The frames
-                    # behind the envelope builders are already
-                    # distributed [tkeys, ts_ms, val] shapes — reuse
-                    # them through the shared chunk pump.
-                    yield from self._select_special_chunked(stmt, db, max(1, int(chunk_size)))
-                    return
-                if stmt.subquery is None and stmt.group_by_time_s is not None and all(
-                    sp.agg not in _SEL_FNS
-                    and sp.agg not in ("distinct", "elapsed")
-                    and sp.expr is None
-                    for sp in stmt.fields
-                ):
-                    # aggregated results are usually small, but a
-                    # huge-cardinality GROUP BY time(N)[, tag] (years
-                    # of seconds buckets × many series) is not —
-                    # stream the bucketed frame the same way
-                    yield from self._select_agg_chunked(stmt, db, max(1, int(chunk_size)))
-                    return
+            stmt = parse_select(stmts[0].strip())
+            if stmt.into is None and not stmt.slimit and not stmt.soffset:
+                yield from self._stream_chunked(
+                    self._plan_select(stmt, db), max(1, int(chunk_size))
+                )
+                return
         yield self.execute(q, db)
 
-    def _select_subquery_chunked(self, stmt: SelectStmt, db: str | None, chunk_size: int):
-        """Chunked subquery statements (round 7; multi-field/wildcard
-        round 8): the outer result is one distributed
-        [*okeys, ts_ms, val] frame per spec (_spec_frame_over — raw
-        re-selection, aggregate, transform, or arithmetic over the
-        subquery's output), so it drains through the shared chunk pump
-        like any other frame; the max_result_rows guard does not
-        apply. Multi-field outers mirror the UNCHUNKED merge exactly:
-        per-spec frames slice internally (LIMIT/OFFSET per spec, as
-        _select_subquery does), full-outer-join on
-        (series key, bucket) into the statement-wide column grid, and
-        LIMIT re-caps the merged rows (offset already consumed
-        per-spec — _merge_series_columns semantics)."""
-        store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
-        prepared = self._subquery_frame(
-            stmt.subquery, store, reg,
-            want_tags=(stmt.group_by_tags, stmt.group_by_star),
-        )
-        if prepared is None:
-            yield _envelope([])
-            return
-        inner_df, igtags, itkeys, outputs = prepared
-        inner_df = self._filter_subquery_output(inner_df, igtags, itkeys, outputs, stmt)
-        ogtags = igtags if stmt.group_by_star else stmt.group_by_tags
-        missing = [t for t in ogtags if t not in igtags]
-        if missing:
-            raise InfluxQLError(f"outer GROUP BY tag(s) {missing} not grouped in the subquery")
-        okeys = [itkeys[igtags.index(t)] for t in ogtags]
-        specs = list(stmt.fields)
-        if any(
-            sp.name == "*" and sp.agg is None and sp.tx is None and sp.expr is None
-            for sp in specs
-        ):
-            if len(specs) != 1:
-                raise InfluxQLError("'*' over a subquery cannot mix with other fields")
-            specs = [FieldSpec(None, name) for name, _src in outputs]
-        colmap = dict(outputs)
-        if len(specs) == 1:
-            grouped, colname = self._spec_frame_over(
-                stmt, specs[0], inner_df, colmap, okeys, False
-            )
-            grouped = grouped.orderBy(
-                *okeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            grouped = _apply_slice(grouped, okeys, stmt)
-            yield from self._stream_chunked(
-                iter([(grouped, colname)]), stmt, ogtags, okeys, chunk_size,
-                lambda r: [r.ts_ms, r.val],
-            )
-            return
-        from dataclasses import replace as _replace
-        from functools import reduce
+    @staticmethod
+    def _stream_chunked(plans: list[_SelectPlan], chunk_size: int):
+        """The chunked drain: each plan's rows stream via
+        toLocalIterator in ``chunk_size`` buffers (a chunk never spans
+        two plans), and every envelope except the final one carries
+        ``partial: true`` (one-chunk lookahead so the last is
+        identifiable)."""
 
-        frames_, names = [], []
-        for i, sp in enumerate(specs):
-            fr, nm = self._spec_frame_over(stmt, sp, inner_df, colmap, okeys, True)
-            fr = fr.orderBy(
-                *okeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            fr = _apply_slice(fr, okeys, stmt)
-            frames_.append(fr.withColumnRenamed("val", f"_v{i}"))
-            names.append(nm)
-        joined = reduce(lambda a, b: a.join(b, [*okeys, "ts_ms"], "full_outer"), frames_)
-        sel = joined.orderBy(
-            *okeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-        )
-        if stmt.limit:
-            sel = _apply_slice(sel, okeys, _replace(stmt, offset=0))
-        n = len(specs)
-        yield from self._stream_chunked(
-            iter([(sel, _dedup_names(names))]), stmt, ogtags, okeys, chunk_size,
-            lambda r: [r.ts_ms, *[getattr(r, f"_v{i}") for i in range(n)]],
-        )
+        def chunks():
+            for plan in plans:
+                buf: list = []
+                for row in plan.frame.toLocalIterator():
+                    buf.append(row)
+                    if len(buf) >= chunk_size:
+                        yield plan, buf
+                        buf = []
+                if buf:
+                    yield plan, buf
 
-    def _select_special_chunked(self, stmt: SelectStmt, db: str | None, chunk_size: int):
-        """Chunked single-field selector/distinct/elapsed statements
-        (round 7): same distributed frame as the envelope path, rows
-        drained via the shared chunk pump."""
-        store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            yield _envelope([])
-            return
-        spec = stmt.fields[0]
-        ff = facts.filter(F.col("field") == spec.name)
-        if spec.agg == "elapsed":
-            sel, colname = self._elapsed_frame(stmt, spec, ff, tkeys)
-        elif spec.agg == "distinct":
-            sel, colname = self._distinct_frame(stmt, spec, ff, tkeys)
-        else:
-            sel, colname = self._selector_frame(stmt, spec, ff, tkeys)
-        yield from self._stream_chunked(
-            iter([(sel, colname)]), stmt, gtags, tkeys, chunk_size,
-            lambda r: [r.ts_ms, r.val],
-        )
+        def envelope(plan: _SelectPlan, rows: list, partial: bool) -> dict:
+            env = _envelope(_plan_series(plan, rows))
+            if partial:
+                env["results"][0]["partial"] = True
+            return env
 
-    def _select_raw_chunked(self, stmt: SelectStmt, db: str | None, chunk_size: int):
-        store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            yield _envelope([])
-            return
-        # round-6 ADVICE: the chunked dispatch must match the
-        # unchunked one — expand wildcards (SELECT * used to stream
-        # nothing), validate ::tag specs, and route multi-field /
-        # ::tag selects through the point-aligned merged frame
-        # instead of per-field unmerged series
-        self._expand_wildcard(stmt, facts)
-        self._validate_tag_specs(stmt)
-        if len(stmt.fields) > 1 or any(sp.tag for sp in stmt.fields):
-            if reg is None:
-                # no registry to derive the series key from: fall back
-                # to the unchunked merged envelope (same result, one
-                # chunk) rather than emitting misaligned series
-                series = self._select_series(stmt, store, reg)
-                if len(stmt.fields) > 1:
-                    series = _merge_series_columns(
-                        series, stmt.order_desc, stmt.limit, stmt.offset,
-                        slice_unmerged=True,
-                    )
-                yield _envelope(series)
-                return
-            sel, colnames = self._raw_multi_frame(stmt, facts, gtags, tkeys, reg)
-            n = len(colnames)
-            yield from self._stream_chunked(
-                iter([(sel, colnames)]), stmt, gtags, tkeys, chunk_size,
-                lambda r: [
-                    r.ts_ms,
-                    *[pivot_ops._maybe_float(getattr(r, f"_v{i}")) for i in range(n)],
-                ],
-            )
-            return
-
-        def frames():
-            for spec in stmt.fields:
-                ff = facts.filter(F.col("field") == spec.name)
-                sel = ff.select(
-                    *tkeys,
-                    F.expr("ts_ns div 1000000").alias("ts_ms"),
-                    F.coalesce(F.col("message"), F.col("value").cast("string")).alias("val"),
-                ).orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
-                yield _apply_slice(sel, tkeys, stmt), spec.name
-
-        yield from self._stream_chunked(
-            frames(), stmt, gtags, tkeys, chunk_size,
-            lambda r: [r.ts_ms, pivot_ops._maybe_float(r.val)],
-        )
-
-    def _select_agg_chunked(self, stmt: SelectStmt, db: str | None, chunk_size: int):
-        """Chunked GROUP BY time(N) aggregates: the bucketed frame
-        (incl. fill and transforms — all DataFrame-side) streams
-        through toLocalIterator exactly like raw points, so a
-        huge-cardinality grouped result (seconds buckets × 10^6
-        series) never materializes on the driver either.
-
-        Multi-field aggregates stream as ONE merged series with
-        bucket-aligned columns (round 6 — matching the unchunked
-        envelope; previously chunked emitted per-field unmerged
-        series): per-field bucketed frames full-outer-join on
-        (series key, bucket), still fully distributed."""
-        store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            yield _envelope([])
-            return
-        self._expand_wildcard(stmt, facts)
-
-        def colname_for(spec: FieldSpec) -> str:
-            base = spec.tx or spec.agg or "mean"
-            base = _DISPLAY.get(base, base)
-            return spec.alias or (f"{base}_{spec.name}" if len(stmt.fields) > 1 else base)
-
-        if len(stmt.fields) > 1:
-            from functools import reduce
-
-            frames_ = []
-            for i, spec in enumerate(stmt.fields):
-                ff = facts.filter(F.col("field") == spec.name)
-                grouped = self._aggregated_frame(stmt, spec, ff, tkeys)
-                frames_.append(grouped.withColumnRenamed("val", f"_v{i}"))
-            joined = reduce(
-                lambda a, b: a.join(b, [*tkeys, "ts_ms"], "full_outer"), frames_
-            )
-            sel = joined.orderBy(
-                *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            sel = _apply_slice(sel, tkeys, stmt)
-            n = len(stmt.fields)
-            yield from self._stream_chunked(
-                iter([(sel, _dedup_names([colname_for(sp) for sp in stmt.fields]))]),
-                stmt, gtags, tkeys, chunk_size,
-                lambda r: [r.ts_ms, *[getattr(r, f"_v{i}") for i in range(n)]],
-            )
-            return
-
-        def frames():
-            for spec in stmt.fields:
-                ff = facts.filter(F.col("field") == spec.name)
-                grouped = self._aggregated_frame(stmt, spec, ff, tkeys)
-                grouped = grouped.orderBy(
-                    *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-                )
-                yield _apply_slice(grouped, tkeys, stmt), colname_for(spec)
-
-        yield from self._stream_chunked(
-            frames(), stmt, gtags, tkeys, chunk_size, lambda r: [r.ts_ms, r.val]
-        )
-
-    def _stream_chunked(self, frames, stmt, gtags, tkeys, chunk_size: int, mapper):
-        """Shared chunk pump: ``frames`` yields (DataFrame, colname);
-        rows stream via toLocalIterator in chunk_size buffers, and
-        every envelope except the final one carries ``partial: true``
-        (one-envelope lookahead so the last chunk is identifiable)."""
-        cap = getattr(self._explain_local, "plans", None)
-        if cap is not None:
-            # EXPLAIN capture mode (round 10): record each per-spec
-            # frame's plan at the point its rows would begin
-            # streaming; nothing executes, nothing streams
-            for sel, _colname in frames:
-                cap.append(_explain_string(sel))
-            yield _envelope([])
-            return
-        emitted = False
-        buf: list = []
-        pending: tuple[list, str] | None = None  # (rows, colname) awaiting more
-        for sel, colname in frames:
-            for row in sel.toLocalIterator():
-                buf.append(row)
-                if len(buf) >= chunk_size:
-                    if pending is not None:
-                        yield self._chunk_envelope(*pending, stmt, gtags, tkeys, True, mapper)
-                    pending = (buf, colname)
-                    buf = []
-                    emitted = True
-            if buf:
-                if pending is not None:
-                    yield self._chunk_envelope(*pending, stmt, gtags, tkeys, True, mapper)
-                pending = (buf, colname)
-                buf = []
-                emitted = True
-        if pending is not None:
-            yield self._chunk_envelope(*pending, stmt, gtags, tkeys, False, mapper)
-        if not emitted:
-            yield _envelope([])
-
-    def _chunk_envelope(self, rows, colname, stmt, gtags, tkeys, partial: bool, mapper=None) -> dict:
-        series = _tag_series(
-            rows, gtags, tkeys, stmt, colname,
-            mapper or (lambda r: [r.ts_ms, pivot_ops._maybe_float(r.val)]),
-        )
-        env = _envelope(series)
-        if partial:
-            env["results"][0]["partial"] = True
-        return env
+        pending = None
+        for chunk in chunks():
+            if pending is not None:
+                yield envelope(*pending, True)
+            pending = chunk
+        yield _envelope([]) if pending is None else envelope(*pending, False)
 
     # -------------------------------------------------------------- SELECT
 
@@ -2386,33 +2177,16 @@ class InfluxQLEngine:
         query on a real cluster needs — scan pushdowns, Exchanges,
         broadcast choices). Runs the FULL planning path — parse,
         registry resolution, frame construction — and captures each
-        frame at the exact point execution would start, executing
-        nothing (a multi-field statement shows one plan per field
-        frame, labeled). EXPLAIN ANALYZE is rejected loudly rather
-        than silently running the query."""
+        result frame at the exact point execution would start,
+        executing nothing. Both drains run the same frames, so the
+        plan is the one the statement gets with or without
+        ``chunked=true``; a FROM /regex/ statement shows one labeled
+        plan per matching measurement. EXPLAIN ANALYZE is rejected
+        loudly rather than silently running the query."""
         inner = self._strip_explain(qs)
         self._explain_local.plans = []
         try:
             self._select(inner, db)
-        finally:
-            plans = self._explain_local.plans
-            self._explain_local.plans = None
-        return self._explain_envelope(plans)
-
-    def _explain_chunked(self, qs: str, db: str | None, chunk_size: int) -> dict:
-        """``EXPLAIN`` under ``chunked=true`` (round 10): the CHUNKED
-        dispatch plans end-to-end and each per-spec frame's Catalyst
-        plan is captured at the exact point its rows would begin
-        streaming through the chunk pump (``toLocalIterator``) —
-        nothing runs, nothing streams. Statements the chunked path
-        would anyway serve as one ordinary envelope capture through
-        ``_bounded_collect`` exactly like plain EXPLAIN, so the two
-        paths show the plan the statement would really get."""
-        inner = self._strip_explain(qs)
-        self._explain_local.plans = []
-        try:
-            for _env in self.execute_chunked(inner, db, chunk_size):
-                pass  # capture mode: envelopes are empty husks
         finally:
             plans = self._explain_local.plans
             self._explain_local.plans = None
@@ -2447,59 +2221,67 @@ class InfluxQLEngine:
         return _envelope([_series("explain", ["QUERY PLAN"], lines)])
 
     def _select(self, qs: str, db: str | None) -> dict:
+        """The collected drain: every result frame of the statement
+        (:meth:`_plan_select`) collects under the ``max_result_rows``
+        guard and cuts into series; SLIMIT/SOFFSET then slice the
+        series list (driver-side: one entry per series)."""
         stmt = parse_select(qs)
-        # decide the merge BEFORE dispatch: _expand_wildcard mutates
-        # stmt.fields in place on the non-regex path (so '*' is gone
-        # by the time the merge check runs) but regex subs are copies
-        # (so '*' survives) — checking after the call made the two
-        # paths disagree about who owns LIMIT/OFFSET (round-7 ADVICE:
-        # single-field '*' under FROM /re/ was sliced twice)
-        merge_needed = len(stmt.fields) > 1 or any(sp.name == "*" for sp in stmt.fields)
-        store = self._stmt_store(stmt, db)
-        reg = store.read_registry()
         if stmt.into is not None:
-            return self._select_into(stmt, store, reg, db)
-        if stmt.subquery is not None:
-            series = self._select_subquery(stmt, store, reg)
-        elif stmt.measurement_regex is not None:
-            # FROM /re/: resolve matching measurements from the (small)
-            # registry, then run the single-measurement pipeline per
-            # match — InfluxDB emits one series set per measurement
-            from dataclasses import replace as _replace
-
-            series: list[dict] = []
-            if reg is not None:
-                pat = re.compile(stmt.measurement_regex)
-                names = sorted(
-                    r.measurement
-                    for r in reg.select("measurement").distinct().collect()
-                    if pat.search(r.measurement)
-                )
-                for meas in names:
-                    sub = _replace(stmt, measurement=meas, measurement_regex=None)
-                    series.extend(self._select_series(sub, store, reg))
-        else:
-            series = self._select_series(stmt, store, reg)
-        # multi-field SELECTs merge into one series per (name, tags)
-        # with aligned columns — the InfluxDB 1.x envelope shape.
-        # Slicing was deferred by _select_series (InfluxDB counts
-        # merged points); the subquery path slices internally, so
-        # only LIMIT re-caps there (idempotent). A '*' field may have
-        # expanded to several per-measurement inside the regex loop
-        # (each `sub` is a copy), so wildcards trigger the merge too.
-        if merge_needed:
-            deferred = stmt.subquery is None
-            series = _merge_series_columns(
-                series, stmt.order_desc, stmt.limit,
-                stmt.offset if deferred else None, slice_unmerged=deferred,
-            )
-        # SLIMIT/SOFFSET slice the series list (driver-side: one entry
-        # per series, already aggregated — small by construction)
+            store = self._stmt_store(stmt, db)
+            return self._select_into(stmt, store, store.read_registry(), db)
+        series = [
+            s
+            for plan in self._plan_select(stmt, db)
+            for s in _plan_series(plan, self._bounded_collect(plan.frame))
+        ]
         if stmt.soffset:
             series = series[stmt.soffset :]
         if stmt.slimit is not None:
             series = series[: stmt.slimit]
         return _envelope(series)
+
+    def _plan_select(self, stmt: SelectStmt, db: str | None) -> list[_SelectPlan]:
+        """The one SELECT planner: the statement's final result frames,
+        ordered, sliced and — for multi-field statements — merged in
+        the engine, one per emitted measurement (``FROM /regex/``
+        yields one per matching measurement, InfluxDB's one series set
+        per source). Nothing executes here beyond metadata-sized
+        collects (registry, wildcard field keys); the caller's drain
+        decides how rows leave the cluster."""
+        store = self._stmt_store(stmt, db)
+        reg = store.read_registry()
+        if stmt.subquery is not None:
+            plan = self._subquery_plan(stmt, store, reg)
+            return [] if plan is None else [plan]
+        if stmt.measurement_regex is None:
+            subs = [stmt]
+        else:
+            from dataclasses import replace as _replace
+
+            subs = [
+                _replace(stmt, measurement=meas, measurement_regex=None)
+                for meas in _regex_measurements(stmt, reg)
+            ]
+        prepared = [(sub, self._prepared_facts(sub, store, reg)) for sub in subs]
+        fks = None
+        if stmt.measurement_regex is not None and any(sp.name == "*" for sp in stmt.fields):
+            # InfluxDB expands a wildcard over the field keys of
+            # EVERY source, so each measurement's series carries
+            # the same columns (null where it lacks the field)
+            fks = sorted(
+                {
+                    r.field
+                    for _sub, (facts, _g, _t) in prepared
+                    if facts is not None
+                    for r in facts.select("field").distinct().collect()
+                }
+            )
+        plans = [
+            self._measurement_plan(sub, reg, facts, gtags, tkeys, fks)
+            for sub, (facts, gtags, tkeys) in prepared
+            if facts is not None
+        ]
+        return [p for p in plans if p is not None]
 
     # ------------------------------------------------- retention policies
 
@@ -2712,16 +2494,8 @@ class InfluxQLEngine:
         if stmt.measurement_regex is not None:
             from dataclasses import replace as _replace
 
-            names: list[str] = []
-            if reg is not None:
-                pat = re.compile(stmt.measurement_regex)
-                names = sorted(
-                    r.measurement
-                    for r in reg.select("measurement").distinct().collect()
-                    if pat.search(r.measurement)
-                )
             total = 0
-            for meas in names:
+            for meas in _regex_measurements(stmt, reg):
                 sub = _replace(
                     stmt,
                     measurement=meas,
@@ -2745,7 +2519,7 @@ class InfluxQLEngine:
         if facts is None:
             return _envelope([_series("result", ["time", "written"], [[0, 0]])])
         # agg(*) / SELECT * INTO expands to the measurement's field
-        # keys like the envelope path (round 6)
+        # keys like a plain SELECT
         self._expand_wildcard(stmt, facts)
         if gtags:
             tag_map = F.map_from_arrays(
@@ -2843,32 +2617,16 @@ class InfluxQLEngine:
         (_spec_frame_over: aggregate / transform / arithmetic / raw
         re-selection) and the bucketed result writes back under the
         same field-naming rules as a base INTO."""
-        prepared = self._subquery_frame(
-            stmt.subquery, store, reg,
-            want_tags=(stmt.group_by_tags, stmt.group_by_star),
-        )
-        if prepared is None:
+        outer = self._outer_level(stmt, store, reg)
+        if outer is None:
             return _envelope([_series("result", ["time", "written"], [[0, 0]])])
-        inner_df, igtags, itkeys, outputs = prepared
-        inner_df = self._filter_subquery_output(inner_df, igtags, itkeys, outputs, stmt)
-        ogtags = igtags if stmt.group_by_star else stmt.group_by_tags
-        missing = [t for t in ogtags if t not in igtags]
-        if missing:
-            raise InfluxQLError(f"outer GROUP BY tag(s) {missing} not grouped in the subquery")
-        okeys = [itkeys[igtags.index(t)] for t in ogtags]
-        specs = list(stmt.fields)
-        if any(sp.name == "*" and sp.agg is None and sp.tx is None and sp.expr is None
-               for sp in specs):
-            if len(specs) != 1:
-                raise InfluxQLError("'*' over a subquery cannot mix with other fields")
-            specs = [FieldSpec(None, name) for name, _src in outputs]
+        inner_df, ogtags, okeys, specs, colmap = outer
         if ogtags:
             tag_map = F.map_from_arrays(
                 F.array(*[F.lit(t) for t in ogtags]), F.array(*[F.col(k) for k in okeys])
             )
         else:
             tag_map = F.from_json(F.lit("{}"), "map<string,string>")
-        colmap = dict(outputs)
         multi = len(specs) > 1
         frames = []
         for spec in specs:
@@ -2964,14 +2722,7 @@ class InfluxQLEngine:
         if stmt.field_filters or stmt.field_or_groups:
             key = ["fingerprint", "ts_ns"]
             if reg is not None:
-                skey = F.xxhash64(
-                    F.to_json(
-                        F.array_sort(
-                            F.map_entries(F.coalesce(F.col("tags"), F.create_map()))
-                        )
-                    )
-                )
-                fp2s = reg.select("fingerprint", skey.alias("_skey")).distinct()
+                fp2s = reg.select("fingerprint", _series_key().alias("_skey")).distinct()
                 facts = facts.join(F.broadcast(fp2s), "fingerprint", "left")
                 key = ["_skey", "ts_ns"]
             def _point_pred(fname, fop, fval):
@@ -3031,15 +2782,19 @@ class InfluxQLEngine:
         return facts, gtags, tkeys
 
     @staticmethod
-    def _expand_wildcard(stmt: SelectStmt, facts: DataFrame) -> None:
-        """SELECT * / agg(*): expand the wildcard to the field keys
-        actually present in the prepared (measurement+time filtered)
-        facts — metadata-sized collect, same cardinality SHOW FIELD
-        KEYS returns. Without this the bare '*' would match no field
-        and silently return empty (SURVEY §7: never silently-empty)."""
+    def _expand_wildcard(
+        stmt: SelectStmt, facts: DataFrame, fks: list[str] | None = None
+    ) -> None:
+        """SELECT * / agg(*): expand the wildcard to ``fks``, by
+        default the field keys actually present in the prepared
+        (measurement+time filtered) facts — metadata-sized collect,
+        same cardinality SHOW FIELD KEYS returns. Without this the
+        bare '*' would match no field and silently return empty
+        (SURVEY §7: never silently-empty)."""
         if not any(s.name == "*" for s in stmt.fields):
             return
-        fks = sorted(r.field for r in facts.select("field").distinct().collect())
+        if fks is None:
+            fks = sorted(r.field for r in facts.select("field").distinct().collect())
         expanded: list[FieldSpec] = []
         for s in stmt.fields:
             if s.name == "*":
@@ -3062,10 +2817,7 @@ class InfluxQLEngine:
 
     @staticmethod
     def _validate_tag_specs(stmt: SelectStmt) -> None:
-        """``host::tag`` columns are legal only alongside raw fields —
-        shared by the collected and chunked paths (round-6 ADVICE: the
-        chunked dispatch used to skip this and silently drop the tag
-        column)."""
+        """``host::tag`` columns are legal only alongside raw fields."""
         if not any(sp.tag for sp in stmt.fields):
             return
         if stmt.group_by_time_s is not None or any(
@@ -3080,156 +2832,229 @@ class InfluxQLEngine:
                 "SELECT must include at least one FIELD alongside ::tag columns"
             )
 
-    def _select_series(self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None) -> list[dict]:
-        facts, gtags, tkeys = self._prepared_facts(stmt, store, reg)
-        if facts is None:
-            return []
-
-        # a '*' present NOW means _select owns the merge (and the
-        # deferred LIMIT/OFFSET) even if it expands to one field —
-        # capture before _expand_wildcard rewrites stmt.fields
-        # (round-7 ADVICE: single-field regex expansion sliced here
-        # AND again in _merge_series_columns)
-        had_wildcard = any(sp.name == "*" for sp in stmt.fields)
-        self._expand_wildcard(stmt, facts)
-
-        def _is_plain_raw(sp: FieldSpec) -> bool:
-            return (
-                not sp.tag
-                and sp.agg is None
-                and sp.tx is None
-                and (sp.expr is None or not _arith_leaves(sp.expr, "agg"))
-            )
-
-        def _is_aggregated(sp: FieldSpec) -> bool:
-            return not sp.tag and not _is_plain_raw(sp)
-
-        if any(_is_plain_raw(sp) for sp in stmt.fields) and any(
-            _is_aggregated(sp) for sp in stmt.fields
-        ):
+    def _measurement_plan(
+        self,
+        stmt: SelectStmt,
+        reg: DataFrame | None,
+        facts: DataFrame,
+        gtags: list[str],
+        tkeys: list[str],
+        fks: list[str] | None = None,
+    ) -> _SelectPlan | None:
+        """Plan a SELECT over one measurement's prepared facts
+        (:meth:`_prepared_facts`): pointwise multi-field statements
+        (raw fields, raw arithmetic, math over raw fields, ``::tag``)
+        align on POINT identity in one frame (:meth:`_raw_multi_frame`);
+        every other statement builds one frame per field
+        (:meth:`_spec_frame`) and merges them (:meth:`_merged_plan`).
+        ``fks`` overrides the field keys a wildcard expands to."""
+        self._expand_wildcard(stmt, facts, fks)
+        if len({_is_pointwise(sp) for sp in stmt.fields if not sp.tag}) > 1:
             # InfluxDB 1.x: "mixing aggregate and non-aggregate queries
             # is not supported" — a silent ts-merge of a raw point
             # stream with a bucketed aggregate would misalign shapes
             raise InfluxQLError(
                 "mixing aggregate and non-aggregate SELECT fields is not supported"
             )
-
         self._validate_tag_specs(stmt)
-
+        multi = len(stmt.fields) > 1
         if (
-            len(stmt.fields) > 1
+            multi
             and stmt.group_by_time_s is None
-            and all(s.agg is None and s.tx is None and s.expr is None for s in stmt.fields)
-            and reg is not None
+            and all(sp.tag or _is_pointwise(sp) for sp in stmt.fields)
         ):
-            # raw multi-field: align columns on POINT identity
-            # (series key + ts) at the engine level — merging
-            # per-field series by timestamp alone would mispair
-            # same-timestamp points of DIFFERENT series (two hosts
-            # sharing :00) nondeterministically
-            return self._raw_multi_series(stmt, facts, gtags, tkeys, reg)
-
-        if (len(stmt.fields) > 1 or had_wildcard) and (stmt.limit or stmt.offset):
-            # Defer LIMIT/OFFSET to the merged envelope: InfluxDB
-            # counts MERGED points, not per-field points (round-6
-            # ADVICE — per-field _apply_slice returned the wrong
-            # window when fields had disjoint timestamps). Per-field
-            # frames run unsliced; _merge_series_columns applies
-            # values[offset:offset+limit] per output series. These
-            # frames are aggregate/transform-sized (raw multi-field
-            # took the _raw_multi_series branch above, which keeps
-            # its distributed slice on the already-merged frame).
-            from dataclasses import replace as _stmt_replace
-
-            stmt = _stmt_replace(stmt, limit=None, offset=None)
-
-        series: list[dict] = []
+            if reg is None:
+                return None
+            frame, columns = self._raw_multi_frame(stmt, facts, gtags, tkeys, reg)
+            tiebreak = tuple(f"_v{i}" for i in range(len(columns)))
+            frame = _order_and_slice(frame, tkeys, stmt, tiebreak)
+            return _SelectPlan(frame, stmt.measurement, gtags, tkeys, columns)
+        framed = []
         for spec in stmt.fields:
-            if spec.expr is not None:
-                series.extend(self._arith_series(stmt, spec, facts, gtags, tkeys, reg))
-                continue
-            fn, fieldname = spec.agg, spec.name
-            ff = facts.filter(F.col("field") == fieldname)
-            if fn == "elapsed":
-                series.extend(self._elapsed_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if fn in _SEL_FNS:
-                series.extend(self._selector_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if (
-                fn in ("max", "min", "first", "last", "percentile")
-                and stmt.group_by_time_s is None
-                and spec.tx is None
-                and len(stmt.fields) == 1
-            ):
-                # InfluxDB: a LONE ungrouped selector returns the
-                # actual point WITH ITS ORIGINAL TIMESTAMP (one per
-                # series). The reference folds it into 1-minute
-                # buckets (cflux.js:749 hard-codes toStartOfMinute) —
-                # round-7 VERDICT asked for the InfluxDB semantics.
-                # Scope matches InfluxDB's own rule: multiple fields
-                # (or tx-wrapped selectors, or GROUP BY time) lose
-                # point-ness and stay on the bucketed path.
-                series.extend(self._selector_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if fn == "distinct":
-                series.extend(self._distinct_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if (
-                fn is None
-                and (spec.tx in _TX_FNS or spec.tx in _TA_FNS)
-                and stmt.group_by_time_s is None
-            ):
-                series.extend(self._raw_transform_series(stmt, spec, ff, gtags, tkeys))
-                continue
-            if fn is None and stmt.group_by_time_s is None:
-                if spec.tx in _MATH_FNS:
-                    # pointwise math over a raw float field: string
-                    # rows are skipped (InfluxDB math ignores string
-                    # fields), output column named after the function
-                    sel = ff.filter(F.col("value").isNotNull()).select(
-                        *tkeys,
-                        F.expr("ts_ns div 1000000").alias("ts_ms"),
-                        F.round(_MATH_FNS[spec.tx](F.col("value"), spec.tx_arg), 6)
-                        .cast("string")
-                        .alias("val"),
-                    )
-                    colname = spec.alias or (f"{spec.tx}_{fieldname}" if len(stmt.fields) > 1 else spec.tx)
-                else:
-                    # raw points, string-over-float per cflux.js:795
-                    sel = ff.select(
-                        *tkeys,
-                        # integer div — double division of epoch-ns longs
-                        # (~1.7e18 > 2^53) can round and shift a ms
-                        F.expr("ts_ns div 1000000").alias("ts_ms"),
-                        F.coalesce(F.col("message"), F.col("value").cast("string")).alias("val"),
-                    )
-                    colname = spec.alias or fieldname
-                sel = sel.orderBy(
-                    *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-                )
-                sel = _apply_slice(sel, tkeys, stmt)
-                rows = self._bounded_collect(sel)
-                series.extend(
-                    _tag_series(
-                        rows, gtags, tkeys, stmt, colname,
-                        lambda r: [r.ts_ms, pivot_ops._maybe_float(r.val)],
-                    )
-                )
-                continue
-            # aggregated path: default = the reference's 1-minute mean
-            # (cflux.js:749); honored GROUP BY time(N) generalizes it
-            grouped = self._aggregated_frame(stmt, spec, ff, tkeys)
-            grouped = grouped.orderBy(
-                *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
+            built = self._spec_frame(stmt, spec, facts, tkeys, reg, multi)
+            if built is None:
+                return None
+            framed.append(built)
+        return self._merged_plan(stmt, framed, stmt.measurement, gtags, tkeys)
+
+    def _spec_frame(
+        self,
+        stmt: SelectStmt,
+        spec: FieldSpec,
+        facts: DataFrame,
+        tkeys: list[str],
+        reg: DataFrame | None,
+        multi: bool,
+    ) -> tuple[DataFrame, str, bool] | None:
+        """One SELECT expression over the prepared facts →
+        (frame ``[*tkeys, ts_ms, val]``, output column name, whether
+        the frame may repeat a timestamp within a series). Unordered
+        and unsliced: :meth:`_merged_plan` owns both. None when raw
+        arithmetic across fields has no registry to align on."""
+        name = _spec_colname(stmt, spec, multi)
+        if spec.expr is not None:
+            if _arith_leaves(spec.expr, "agg"):
+                return self._arith_agg_frame(stmt, spec, facts, tkeys), name, False
+            if stmt.group_by_time_s is not None:
+                raise InfluxQLError("GROUP BY time() requires aggregated SELECT expressions")
+            frame = self._arith_raw_frame(spec, facts, tkeys, reg)
+            return None if frame is None else (frame, name, True)
+        fn = spec.agg
+        ff = facts.filter(F.col("field") == spec.name)
+        ungrouped = stmt.group_by_time_s is None
+        if fn == "elapsed":
+            return self._elapsed_frame(spec, ff, tkeys), name, True
+        if fn in _SEL_FNS or (
+            fn in ("max", "min", "first", "last", "percentile")
+            and ungrouped
+            and spec.tx is None
+            and not multi
+        ):
+            # InfluxDB: a LONE ungrouped selector returns the actual
+            # point WITH ITS ORIGINAL TIMESTAMP (one per series). The
+            # reference folds it into 1-minute buckets (cflux.js:749
+            # hard-codes toStartOfMinute). Scope matches InfluxDB's
+            # own rule: multiple fields (or tx-wrapped selectors, or
+            # GROUP BY time) lose point-ness and stay bucketed.
+            return self._selector_frame(stmt, spec, ff, tkeys), name, True
+        if fn == "distinct":
+            return self._distinct_frame(stmt, ff, tkeys), name, True
+        if fn is None and ungrouped:
+            if spec.tx in _TX_FNS or spec.tx in _TA_FNS:
+                return self._raw_transform_frame(stmt, spec, ff, tkeys), name, True
+            if spec.tx in _MATH_FNS:
+                # pointwise math over a raw float field: string rows
+                # are skipped (InfluxDB math ignores string fields)
+                val = F.round(_MATH_FNS[spec.tx](F.col("value"), spec.tx_arg), 6)
+                ff = ff.filter(F.col("value").isNotNull())
+            else:
+                # raw points, string-over-float per cflux.js:795
+                val = F.coalesce(F.col("message"), F.col("value").cast("string"))
+            # integer div — double division of epoch-ns longs (~1.7e18
+            # > 2^53) can round and shift a ms
+            frame = ff.select(*tkeys, F.expr("ts_ns div 1000000").alias("ts_ms"), val.alias("val"))
+            return frame, name, True
+        # aggregated path: default = the reference's 1-minute mean
+        # (cflux.js:749); honored GROUP BY time(N) generalizes it
+        return self._aggregated_frame(stmt, spec, ff, tkeys), name, False
+
+    def _subquery_plan(
+        self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None
+    ) -> _SelectPlan | None:
+        """SELECT agg(col) FROM (SELECT agg(field) FROM m ...) —
+        InfluxDB 1.2+ subqueries (absent in the reference; NEXT.md #7).
+
+        The inner statement's bucketed frame is NEVER collected: the
+        outer expressions compose onto it (:meth:`_spec_frame_over`),
+        so the whole thing stays one Catalyst plan (scan → inner agg
+        shuffle → outer agg shuffle). The canonical Grafana shape
+        ``SELECT mean(max) FROM (SELECT max(v) FROM m GROUP BY
+        time(1m), host) GROUP BY time(1m)`` is one job."""
+        outer = self._outer_level(stmt, store, reg)
+        if outer is None:
+            return None
+        inner_df, ogtags, okeys, specs, colmap = outer
+        multi = len(specs) > 1
+        rows = self._rows_over_frame(stmt, specs, inner_df, colmap, okeys)
+        if rows is not None:
+            frame, names = rows
+            tiebreak = tuple(f"_v{i}" for i in range(len(names)))
+            return _SelectPlan(
+                _order_and_slice(frame, okeys, stmt, tiebreak),
+                stmt.measurement,
+                ogtags,
+                okeys,
+                _dedup_names(names),
             )
-            grouped = _apply_slice(grouped, tkeys, stmt)
-            rows = self._bounded_collect(grouped)
-            base = spec.tx or fn or "mean"
-            base = _DISPLAY.get(base, base)
-            colname = spec.alias or (f"{base}_{fieldname}" if len(stmt.fields) > 1 else base)
-            series.extend(_tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val]))
-        return _dedup_statement_columns(series)
+        framed = []
+        for spec in specs:
+            frame, name = self._spec_frame_over(stmt, spec, inner_df, colmap, okeys, multi)
+            # re-selections and transforms mixed with aggregates keep
+            # the frame's rows, which repeat a time when the outer
+            # level groups fewer tags
+            repeats = spec.agg is None and (spec.expr is None or not _arith_leaves(spec.expr, "agg"))
+            framed.append((frame, name, repeats))
+        return self._merged_plan(stmt, framed, stmt.measurement, ogtags, okeys)
+
+    def _outer_level(
+        self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None
+    ) -> tuple[DataFrame, list[str], list[str], list[FieldSpec], dict[str, str]] | None:
+        """The outermost level of a statement whose FROM is a
+        subquery: (the subquery's output frame after the outer WHERE,
+        outer GROUP BY tags, their frame columns, the outer SELECT
+        expressions, output name → frame column); None when the
+        subquery has nothing to read."""
+        prepared = self._subquery_frame(
+            stmt.subquery, store, reg,
+            want_tags=(stmt.group_by_tags, stmt.group_by_star),
+        )
+        if prepared is None:
+            return None
+        inner_df, igtags, itkeys, outputs = prepared
+        inner_df = self._filter_subquery_output(inner_df, igtags, itkeys, outputs, stmt)
+        ogtags = igtags if stmt.group_by_star else stmt.group_by_tags
+        missing = [t for t in ogtags if t not in igtags]
+        if missing:
+            raise InfluxQLError(f"outer GROUP BY tag(s) {missing} not grouped in the subquery")
+        okeys = [itkeys[igtags.index(t)] for t in ogtags]
+        # SELECT * over a subquery re-selects every output column
+        specs = list(stmt.fields)
+        if any(sp.name == "*" and sp.agg is None and sp.tx is None and sp.expr is None
+               for sp in specs):
+            if len(specs) != 1:
+                raise InfluxQLError("'*' over a subquery cannot mix with other fields")
+            specs = [FieldSpec(None, name) for name, _src in outputs]
+        return inner_df, ogtags, okeys, specs, dict(outputs)
+
+    @staticmethod
+    def _merged_plan(
+        stmt: SelectStmt,
+        framed: list[tuple[DataFrame, str, bool]],
+        name: str,
+        gtags: list[str],
+        tkeys: list[str],
+    ) -> _SelectPlan:
+        """Merge per-field ``[*tkeys, ts_ms, val]`` frames into the
+        statement's one result frame ``[*tkeys, ts_ms, _v0.._vN]`` —
+        InfluxDB 1.x returns ONE series per (measurement, tag set)
+        whose columns are the statement's fields, null where a field
+        has no point. The frames full-outer-join on (series, time);
+        when a field may repeat a time within a series (``distinct``,
+        ``top``/``bottom``/``sample``, ``elapsed``, raw transforms),
+        the k-th value at a time (in value order) takes row slot k, so
+        every value lands in its own row and fields pair
+        deterministically. LIMIT/OFFSET then count MERGED rows (a
+        field's points alone would slice the wrong window when fields
+        have disjoint timestamps). A field that matched nothing keeps
+        its column, all null: the column set is the statement's."""
+        from functools import reduce
+
+        from pyspark.sql import Window as _W
+
+        slotted = len(framed) > 1 and any(repeats for _f, _n, repeats in framed)
+        frames = []
+        for i, (frame, _name, repeats) in enumerate(framed):
+            frame = frame.select(*tkeys, "ts_ms", F.col("val").alias(f"_v{i}"))
+            if slotted:
+                slot = (
+                    F.row_number().over(
+                        _W.partitionBy(*tkeys, "ts_ms").orderBy(F.col(f"_v{i}").asc_nulls_last())
+                    )
+                    if repeats
+                    else F.lit(1)
+                )
+                frame = frame.withColumn("_slot", slot)
+            frames.append(frame)
+        keys = [*tkeys, "ts_ms", *(["_slot"] if slotted else [])]
+        joined = reduce(lambda a, b: a.join(b, keys, "full_outer"), frames)
+        tiebreak = ("_slot",) if slotted else tuple(f"_v{i}" for i in range(len(frames)))
+        return _SelectPlan(
+            _order_and_slice(joined, tkeys, stmt, tiebreak),
+            name,
+            gtags,
+            tkeys,
+            _dedup_names([n for _f, n, _r in framed]),
+        )
 
     @staticmethod
     def _arith_col(node: tuple, leaf_col) -> Column:
@@ -3252,16 +3077,6 @@ class InfluxQLEngine:
         if op == "*":
             return left * right
         return F.try_divide(left, right)
-
-    def _arith_series(
-        self, stmt: SelectStmt, spec: FieldSpec, facts: DataFrame, gtags, tkeys, reg
-    ) -> list[dict]:
-        """SELECT arithmetic (round 5): ``max(v) - min(v)``,
-        ``mean(v) * 100`` (aggregate kind) or ``user + sys``,
-        ``user * 100`` (raw kind)."""
-        if _arith_leaves(spec.expr, "agg"):
-            return self._arith_agg_series(stmt, spec, facts, gtags, tkeys)
-        return self._arith_raw_series(stmt, spec, facts, gtags, tkeys, reg)
 
     def _arith_agg_frame(
         self, stmt: SelectStmt, spec: FieldSpec, facts: DataFrame, tkeys
@@ -3310,64 +3125,50 @@ class InfluxQLEngine:
             grouped = grouped.filter(F.col("val").isNotNull())
         return grouped
 
-    def _arith_agg_series(
-        self, stmt: SelectStmt, spec: FieldSpec, facts: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        """Envelope form of :meth:`_arith_agg_frame`."""
-        grouped = self._arith_agg_frame(stmt, spec, facts, tkeys)
-        grouped = grouped.orderBy(
-            *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-        )
-        grouped = _apply_slice(grouped, tkeys, stmt)
-        rows = self._bounded_collect(grouped)
-        colname = spec.alias or spec.name
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-
     def _raw_multi_frame(
         self, stmt: SelectStmt, facts: DataFrame, gtags, tkeys, reg
     ) -> tuple[DataFrame, list[str]]:
         """Point-aligned frame for a raw multi-field SELECT →
-        (ordered+sliced DataFrame [*tkeys, ts_ms, _v0.._vN], output
-        column names). Shared by the collected (_raw_multi_series) and
-        chunked (_select_raw_multi_chunked) paths so both emit the
-        same merged series (round-6 ADVICE: chunked used to emit
-        per-field unmerged series for the same query).
+        (unordered DataFrame [*tkeys, ts_ms, _v0.._vN], output column
+        names).
 
         Each field's rows key on (series key, ts) — the
         registry-derived tag-set hash, field-independent — and
         full-outer-join so a point missing a field carries null in
         that column (InfluxDB's storage model reads back the whole
-        point). GROUP BY tags re-attach from the registry by series
-        key. String fields ride as strings (string-over-float,
-        cflux.js:795)."""
-        skey = F.xxhash64(
-            F.to_json(
-                F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map())))
-            )
-        )
-        fp2s = reg.select("fingerprint", skey.alias("_skey")).distinct()
+        point); raw arithmetic fields (``user * 2``) join the same way
+        through :meth:`_arith_raw_frame` (``keyed=True``), and math
+        over a field (``abs(user)``) rides on that field's rows. GROUP BY
+        tags re-attach from the registry by series key. String fields
+        ride as strings (string-over-float, cflux.js:795)."""
+        fp2s = reg.select("fingerprint", _series_key().alias("_skey")).distinct()
         joined = None
         for i, spec in enumerate(stmt.fields):
             if spec.tag:
                 continue
-            d = (
-                facts.filter(F.col("field") == spec.name)
-                .join(F.broadcast(fp2s), "fingerprint")
-                .select(
-                    "_skey",
-                    "ts_ns",
-                    F.coalesce(F.col("message"), F.col("value").cast("string")).alias(
-                        f"_v{i}"
-                    ),
+            if spec.expr is not None:
+                d = self._arith_raw_frame(spec, facts, [], reg, keyed=True).select(
+                    "_skey", "ts_ns", F.col("val").alias(f"_v{i}")
                 )
-            )
+            else:
+                d = facts.filter(F.col("field") == spec.name)
+                if spec.tx is not None:
+                    # pointwise math: string rows are skipped (InfluxDB
+                    # math ignores string fields)
+                    d = d.filter(F.col("value").isNotNull())
+                    val = F.round(_MATH_FNS[spec.tx](F.col("value"), spec.tx_arg), 6)
+                else:
+                    val = F.coalesce(F.col("message"), F.col("value").cast("string"))
+                d = d.join(F.broadcast(fp2s), "fingerprint").select(
+                    "_skey", "ts_ns", val.alias(f"_v{i}")
+                )
             joined = d if joined is None else joined.join(d, ["_skey", "ts_ns"], "full_outer")
         tag_specs = [(i, sp) for i, sp in enumerate(stmt.fields) if sp.tag]
         if tag_specs:
             # ::tag columns are series-level attributes: one registry
             # join per point on the series key attaches them all
             tcols = reg.select(
-                skey.alias("_skey"),
+                _series_key().alias("_skey"),
                 *[
                     F.element_at(F.col("tags"), sp.name).alias(f"_v{i}")
                     for i, sp in tag_specs
@@ -3376,7 +3177,7 @@ class InfluxQLEngine:
             joined = joined.join(F.broadcast(tcols), "_skey", "left")
         if gtags:
             tagvals = reg.select(
-                skey.alias("_skey"),
+                _series_key().alias("_skey"),
                 *[
                     F.coalesce(F.element_at(F.col("tags"), t), F.lit("")).alias(f"_t{i}")
                     for i, t in enumerate(gtags)
@@ -3387,23 +3188,8 @@ class InfluxQLEngine:
             *tkeys,
             F.expr("ts_ns div 1000000").alias("ts_ms"),
             *[F.col(f"_v{i}") for i in range(len(stmt.fields))],
-        ).orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
-        sel = _apply_slice(sel, tkeys, stmt)
-        return sel, _dedup_names([sp.alias or sp.name for sp in stmt.fields])
-
-    def _raw_multi_series(
-        self, stmt: SelectStmt, facts: DataFrame, gtags, tkeys, reg
-    ) -> list[dict]:
-        sel, colnames = self._raw_multi_frame(stmt, facts, gtags, tkeys, reg)
-        rows = self._bounded_collect(sel)
-        n = len(colnames)
-        return _tag_series(
-            rows, gtags, tkeys, stmt, colnames,
-            lambda r: [
-                r.ts_ms,
-                *[pivot_ops._maybe_float(getattr(r, f"_v{i}")) for i in range(n)],
-            ],
         )
+        return sel, _dedup_names([_spec_colname(stmt, sp, True) for sp in stmt.fields])
 
     def _arith_raw_frame(
         self, spec: FieldSpec, facts: DataFrame, tkeys, reg, ns: bool = False,
@@ -3441,28 +3227,15 @@ class InfluxQLEngine:
             )
         if reg is None:
             return None
+        fp2s = reg.select("fingerprint", _series_key().alias("_skey")).distinct()
         if len(fields_used) == 1:
-            skey1 = F.xxhash64(
-                F.to_json(
-                    F.array_sort(
-                        F.map_entries(F.coalesce(F.col("tags"), F.create_map()))
-                    )
-                )
-            )
-            fp2s1 = reg.select("fingerprint", skey1.alias("_skey")).distinct()
             base = facts.filter(
                 (F.col("field") == fields_used[0]) & F.col("value").isNotNull()
-            ).join(F.broadcast(fp2s1), "fingerprint")
+            ).join(F.broadcast(fp2s), "fingerprint")
             val = F.round(self._arith_col(node, lambda lf: F.col("value")), 6)
             return base.select("_skey", "ts_ns", *tkeys, val.alias("val")).filter(
                 F.col("val").isNotNull()
             )
-        skey = F.xxhash64(
-            F.to_json(
-                F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map())))
-            )
-        )
-        fp2s = reg.select("fingerprint", skey.alias("_skey")).distinct()
         joined = None
         for i, fname in enumerate(fields_used):
             d = (
@@ -3486,39 +3259,7 @@ class InfluxQLEngine:
             F.col("val").isNotNull()
         )
 
-    def _arith_raw_series(
-        self, stmt: SelectStmt, spec: FieldSpec, facts: DataFrame, gtags, tkeys, reg
-    ) -> list[dict]:
-        """Envelope form of :meth:`_arith_raw_frame`."""
-        if stmt.group_by_time_s is not None:
-            raise InfluxQLError(
-                "GROUP BY time() requires aggregated SELECT expressions"
-            )
-        frame = self._arith_raw_frame(spec, facts, tkeys, reg)
-        if frame is None:
-            return []
-        sel = frame.withColumn("val", F.col("val").cast("string"))
-        sel = sel.orderBy(
-            *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-        )
-        sel = _apply_slice(sel, tkeys, stmt)
-        rows = self._bounded_collect(sel)
-        colname = spec.alias or spec.name
-        return _tag_series(
-            rows, gtags, tkeys, stmt, colname,
-            lambda r: [r.ts_ms, pivot_ops._maybe_float(r.val)],
-        )
-
-    def _elapsed_series(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        sel, colname = self._elapsed_frame(stmt, spec, ff, tkeys)
-        rows = self._bounded_collect(sel)
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-
-    def _elapsed_frame(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
-    ) -> tuple[DataFrame, str]:
+    def _elapsed_frame(self, spec: FieldSpec, ff: DataFrame, tkeys) -> DataFrame:
         """elapsed(f[, unit]) — integer gap between consecutive points
         of a series, emitted at the later point's timestamp (InfluxDB
         semantics; default unit 1ns). A raw-point transform, not an
@@ -3535,7 +3276,7 @@ class InfluxQLEngine:
             from cflux_spark.operators.windows import merged_window_stage
 
             staged, w, fin = merged_window_stage(ff)
-        sel = (
+        return (
             fin(staged.withColumn("_dt", F.col("ts_ns") - F.lag("ts_ns").over(w)))
             .filter(F.col("_dt").isNotNull())
             .select(
@@ -3543,24 +3284,7 @@ class InfluxQLEngine:
                 F.expr("ts_ns div 1000000").alias("ts_ms"),
                 F.expr(f"_dt div {unit_ns}").alias("val"),
             )
-            .orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
         )
-        sel = _apply_slice(sel, tkeys, stmt)
-        colname = spec.alias or (f"elapsed_{spec.name}" if len(stmt.fields) > 1 else "elapsed")
-        return sel, colname
-
-    def _raw_transform_series(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        """Envelope form of :meth:`_raw_transform_frame`."""
-        sel = self._raw_transform_frame(stmt, spec, ff, tkeys)
-        sel = sel.orderBy(
-            *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-        )
-        sel = _apply_slice(sel, tkeys, stmt)
-        rows = self._bounded_collect(sel)
-        colname = spec.alias or (f"{spec.tx}_{spec.name}" if len(stmt.fields) > 1 else spec.tx)
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
 
     def _raw_transform_frame(
         self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
@@ -3575,8 +3299,8 @@ class InfluxQLEngine:
         _aggregated_frame so ``derivative(v)`` and
         ``derivative(mean(v)) GROUP BY time`` agree on
         regularly-spaced data. Returns the unordered frame
-        ``[*tkeys, ts_ms, val]`` — shared by the envelope path and
-        (round 8) raw-transform subquery levels."""
+        ``[*tkeys, ts_ms, val]`` — shared by the SELECT planner and
+        raw-transform subquery levels."""
         from pyspark.sql import Window as _W
 
         from cflux_spark.operators.windows import merged_running_sum, merged_window_stage
@@ -3640,9 +3364,11 @@ class InfluxQLEngine:
                 unit_s = spec.tx_arg if spec.tx_arg is not None else 1.0
                 dv = v - F.lag(v).over(w)
                 dt_s = (F.col("ts_ns") - F.lag("ts_ns").over(w)) / F.lit(1e9)
-                sel = staged.withColumn("_v", F.round(dv / dt_s * F.lit(unit_s), 6)).filter(
-                    F.col("_v").isNotNull()
-                )
+                # try_divide: a point that does not advance time (two
+                # series merged at one timestamp) emits nothing, as in
+                # InfluxDB, instead of failing under ANSI mode
+                der = F.try_divide(dv, dt_s) * F.lit(unit_s)
+                sel = staged.withColumn("_v", F.round(der, 6)).filter(F.col("_v").isNotNull())
                 if spec.tx == "non_negative_derivative":
                     sel = sel.filter(F.col("_v") >= 0)
             sel = fin(sel)
@@ -3650,33 +3376,22 @@ class InfluxQLEngine:
             *tkeys, F.expr("ts_ns div 1000000").alias("ts_ms"), F.col("_v").alias("val")
         )
 
-    def _selector_series(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        """top(f, N) / bottom(f, N) — the N actual points per series
-        (and per time bucket under GROUP BY time), keeping their own
-        timestamps. Ties break toward the earlier point, as InfluxDB's
-        selectors do. Partitioned rank when there are grouping keys;
-        a global top-N (TakeOrdered, no single-partition window) when
-        there are none.
-
-        Also serves the LONE ungrouped max/min/first/last (round 7:
-        InfluxDB returns the actual point with its original
-        timestamp; k=1). max/min order by value (nulls filtered —
-        string-only points have no numeric value to select);
-        first/last order by time with value-asc tiebreak at
-        duplicate timestamps (deterministic; InfluxDB leaves the
-        tie undefined)."""
-        sel, colname = self._selector_frame(stmt, spec, ff, tkeys)
-        rows = self._bounded_collect(sel)
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-
     def _selector_frame(
         self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
-    ) -> tuple[DataFrame, str]:
-        """The distributed frame behind :meth:`_selector_series` —
-        split out (round 7) so the chunk pump can stream selector
-        results instead of falling back to one envelope.
+    ) -> DataFrame:
+        """top(f, N) / bottom(f, N) / sample(f, N) — the N actual points
+        per series (and per time bucket under GROUP BY time), keeping
+        their own timestamps. Ties break toward the earlier point, as
+        InfluxDB's selectors do. Partitioned rank when there are
+        grouping keys; a global top-N (TakeOrdered, no
+        single-partition window) when there are none.
+
+        Also serves the LONE ungrouped max/min/first/last (InfluxDB
+        returns the actual point with its original timestamp; k=1).
+        max/min order by value (nulls filtered — string-only points
+        have no numeric value to select); first/last order by time
+        with value-asc tiebreak at duplicate timestamps
+        (deterministic; InfluxDB leaves the tie undefined).
 
         percentile (lone + ungrouped-time) picks the NEAREST-RANK
         point (index floor(n·p/100+0.5) in value order; < 1 yields no
@@ -3684,7 +3399,7 @@ class InfluxQLEngine:
         else a value-then-point two-phase (the nearest-rank aggregate
         broadcast back onto the facts — no global window)."""
         if spec.agg == "percentile":
-            return self._percentile_point_frame(stmt, spec, ff, tkeys)
+            return self._percentile_point_frame(spec, ff, tkeys)
         k = int(spec.agg_arg or 1)
         if k < 1:
             raise InfluxQLError(f"{spec.agg}(field, N) requires N >= 1")
@@ -3721,20 +3436,11 @@ class InfluxQLEngine:
             picked = ff.orderBy(
                 val_order, F.col("ts_ns").asc(), F.col("value").asc_nulls_last()
             ).limit(k)
-        sel = picked.select(
-            *tkeys,
-            F.expr("ts_ns div 1000000").alias("ts_ms"),
-            F.col("value").alias("val"),
-        ).orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
-        # LIMIT/OFFSET (incl. per-series under GROUP BY <tag>) applies to
-        # selector output points too, like every other series builder
-        sel = _apply_slice(sel, tkeys, stmt)
-        colname = spec.alias or (f"{spec.agg}_{spec.name}" if len(stmt.fields) > 1 else spec.agg)
-        return sel, colname
+        return picked.select(
+            *tkeys, F.expr("ts_ns div 1000000").alias("ts_ms"), F.col("value").alias("val")
+        )
 
-    def _percentile_point_frame(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
-    ) -> tuple[DataFrame, str]:
+    def _percentile_point_frame(self, spec: FieldSpec, ff: DataFrame, tkeys) -> DataFrame:
         """Lone percentile without GROUP BY time: the ACTUAL point at
         the nearest-rank index (InfluxDB semantics — original
         timestamp, index floor(n·p/100+0.5) over value-sorted points,
@@ -3768,25 +3474,11 @@ class InfluxQLEngine:
                 .orderBy(F.col("ts_ns").asc())
                 .limit(1)
             )
-        sel = picked.select(
+        return picked.select(
             *tkeys, F.expr("ts_ns div 1000000").alias("ts_ms"), F.col("value").alias("val")
-        ).orderBy(*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"))
-        sel = _apply_slice(sel, tkeys, stmt)
-        colname = spec.alias or (
-            f"percentile_{spec.name}" if len(stmt.fields) > 1 else "percentile"
         )
-        return sel, colname
 
-    def _distinct_series(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, gtags, tkeys
-    ) -> list[dict]:
-        sel, colname = self._distinct_frame(stmt, spec, ff, tkeys)
-        rows = self._bounded_collect(sel)
-        return _tag_series(rows, gtags, tkeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-
-    def _distinct_frame(
-        self, stmt: SelectStmt, spec: FieldSpec, ff: DataFrame, tkeys
-    ) -> tuple[DataFrame, str]:
+    def _distinct_frame(self, stmt: SelectStmt, ff: DataFrame, tkeys) -> DataFrame:
         """distinct(f) — unique field values; under GROUP BY time the
         uniqueness is per bucket (emitted at bucket start), otherwise
         InfluxDB stamps epoch 0."""
@@ -3795,65 +3487,7 @@ class InfluxQLEngine:
             if stmt.group_by_time_s
             else F.lit(0).cast("long")
         )
-        sel = (
-            ff.select(*tkeys, bucket.alias("ts_ms"), F.col("value").alias("val"))
-            .distinct()
-            .orderBy(
-                *tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"), F.col("val")
-            )
-        )
-        sel = _apply_slice(sel, tkeys, stmt)
-        colname = spec.alias or (f"distinct_{spec.name}" if len(stmt.fields) > 1 else "distinct")
-        return sel, colname
-
-    def _select_subquery(self, stmt: SelectStmt, store: LPStore, reg: DataFrame | None) -> list[dict]:
-        """SELECT agg(col) FROM (SELECT agg(field) FROM m ...) —
-        InfluxDB 1.2+ subqueries (absent in the reference; NEXT.md #7).
-
-        The inner statement's bucketed frame is NEVER collected: the
-        outer aggregate composes onto it as another groupBy, so the
-        whole thing stays one Catalyst plan (scan → inner agg shuffle →
-        outer agg shuffle). The canonical Grafana shape
-        ``SELECT mean(max) FROM (SELECT max(v) FROM m GROUP BY
-        time(1m), host) GROUP BY time(1m)`` is one job."""
-        prepared = self._subquery_frame(
-            stmt.subquery, store, reg,
-            want_tags=(stmt.group_by_tags, stmt.group_by_star),
-        )
-        if prepared is None:
-            return []
-        inner_df, igtags, itkeys, outputs = prepared
-
-        inner_df = self._filter_subquery_output(inner_df, igtags, itkeys, outputs, stmt)
-
-        ogtags = igtags if stmt.group_by_star else stmt.group_by_tags
-        missing = [t for t in ogtags if t not in igtags]
-        if missing:
-            raise InfluxQLError(f"outer GROUP BY tag(s) {missing} not grouped in the subquery")
-        okeys = [itkeys[igtags.index(t)] for t in ogtags]
-
-        # SELECT * over a subquery re-selects every output column
-        specs = list(stmt.fields)
-        if any(sp.name == "*" and sp.agg is None and sp.tx is None and sp.expr is None
-               for sp in specs):
-            if len(specs) != 1:
-                raise InfluxQLError("'*' over a subquery cannot mix with other fields")
-            specs = [FieldSpec(None, name) for name, _src in outputs]
-        multi = len(specs) > 1
-        colmap = dict(outputs)
-
-        series: list[dict] = []
-        for spec in specs:
-            grouped, colname = self._spec_frame_over(stmt, spec, inner_df, colmap, okeys, multi)
-            grouped = grouped.orderBy(
-                *okeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms")
-            )
-            grouped = _apply_slice(grouped, okeys, stmt)
-            rows = self._bounded_collect(grouped)
-            series.extend(
-                _tag_series(rows, ogtags, okeys, stmt, colname, lambda r: [r.ts_ms, r.val])
-            )
-        return series
+        return ff.select(*tkeys, bucket.alias("ts_ms"), F.col("value").alias("val")).distinct()
 
     def _spec_frame_over(
         self,
@@ -3885,12 +3519,7 @@ class InfluxQLEngine:
           _arith_agg_frame."""
 
         def col_of(name: str) -> str:
-            if name not in colmap:
-                raise InfluxQLError(
-                    f"field {name!r} does not match subquery output "
-                    f"{sorted(colmap) if len(colmap) > 1 else repr(next(iter(colmap)))}"
-                )
-            return colmap[name]
+            return _output_col(colmap, name)
 
         drop_join_nulls = len(colmap) > 1
         if spec.expr is not None:
@@ -4006,6 +3635,47 @@ class InfluxQLEngine:
         grouped = self._apply_tx_bucketed(grouped, stmt, spec, tkeys)
         fn = spec.tx or spec.agg
         return grouped, (spec.alias or (f"{fn}_{spec.name}" if multi else _DISPLAY.get(fn, fn)))
+
+    def _rows_over_frame(
+        self,
+        stmt: SelectStmt,
+        specs: list[FieldSpec],
+        inner_df: DataFrame,
+        colmap: dict[str, str],
+        tkeys: list[str],
+        prefix: str = "_v",
+    ) -> tuple[DataFrame, list[str]] | None:
+        """Two or more re-selections / raw arithmetic over a subquery's
+        output keep its rows one for one, so they share the row
+        identity: ONE select over the frame pairs them (a join on
+        (tags, time) would pair values of different inner rows when
+        the outer level groups fewer tags) → (``[*tkeys, ts_ms,
+        <prefix>0..N]``, output names). A row every column drops is
+        dropped: a re-selection keeps its nulls only over a
+        single-column frame (an intentional fill(null) grid), raw
+        arithmetic drops its nulls. None when the statement is
+        grouped by time or some expression is not raw."""
+        if len(specs) < 2 or stmt.group_by_time_s is not None or not all(
+            _is_raw(sp) for sp in specs
+        ):
+            return None
+        vals = [
+            F.col(_output_col(colmap, sp.name))
+            if sp.expr is None
+            else F.round(
+                self._arith_col(sp.expr, lambda lf: F.col(_output_col(colmap, lf[1]))), 6
+            )
+            for sp in specs
+        ]
+        frame = inner_df.select(
+            *tkeys, "ts_ms", *[v.alias(f"{prefix}{i}") for i, v in enumerate(vals)]
+        )
+        if len(colmap) > 1 or all(sp.expr is not None for sp in specs):
+            from functools import reduce
+
+            kept = [F.col(f"{prefix}{i}").isNotNull() for i in range(len(specs))]
+            frame = frame.filter(reduce(lambda a, b: a | b, kept))
+        return frame, [sp.alias or sp.name for sp in specs]
 
     def _frame_selector(
         self,
@@ -4293,14 +3963,7 @@ class InfluxQLEngine:
                 raise InfluxQLError("::tag columns inside a subquery are not supported")
             self._expand_wildcard(stmt, facts)
 
-            def _is_plain_raw(sp: FieldSpec) -> bool:
-                return (
-                    sp.agg is None
-                    and sp.tx is None
-                    and (sp.expr is None or not _arith_leaves(sp.expr, "agg"))
-                )
-
-            raw_kind = [sp for sp in stmt.fields if _is_plain_raw(sp)]
+            raw_kind = [sp for sp in stmt.fields if _is_raw(sp)]
             if raw_kind and len(raw_kind) != len(stmt.fields):
                 # same fence as the base path: a silent ts-merge of a
                 # raw point stream with a bucketed aggregate would
@@ -4415,6 +4078,16 @@ class InfluxQLEngine:
             raise InfluxQLError(f"GROUP BY tag(s) {missing} not grouped in the inner subquery")
         tkeys = [itkeys[igtags.index(t)] for t in gtags]
         colmap = dict(outputs)
+        rows = self._rows_over_frame(stmt, stmt.fields, inner_df, colmap, tkeys, "_c")
+        if rows is not None:
+            frame, names = rows
+            dup = next((nm for i, nm in enumerate(names) if nm in names[:i]), None)
+            if dup is not None:
+                raise InfluxQLError(
+                    f"duplicate subquery output column {dup!r}: alias one (AS ...)"
+                )
+            frame = self._slice_level(frame, tkeys, stmt)
+            return frame, gtags, tkeys, [(nm, f"_c{i}") for i, nm in enumerate(names)]
         if len(stmt.fields) == 1:
             frame, name = self._spec_frame_over(
                 stmt, stmt.fields[0], inner_df, colmap, tkeys, multi=False
@@ -4478,12 +4151,7 @@ class InfluxQLEngine:
 
         if reg is None:
             return None
-        skey = F.xxhash64(
-            F.to_json(
-                F.array_sort(F.map_entries(F.coalesce(F.col("tags"), F.create_map())))
-            )
-        )
-        fp2s = reg.select("fingerprint", skey.alias("_skey")).distinct()
+        fp2s = reg.select("fingerprint", _series_key().alias("_skey")).distinct()
         base = facts.join(F.broadcast(fp2s), "fingerprint")
         joined = None
         n = len(stmt.fields)
@@ -4801,7 +4469,9 @@ class InfluxQLEngine:
                 unit_s = spec.tx_arg if spec.tx_arg is not None else 1.0
                 dv = F.col("val") - F.lag("val").over(wt)
                 dt_s = (F.col("ts_ms") - F.lag("ts_ms").over(wt)) / F.lit(1000.0)
-                der = F.round(dv / dt_s * F.lit(unit_s), 6)
+                # a zero time step (series merged at one bucket) emits
+                # nothing — try_divide, as in the raw-point path
+                der = F.round(F.try_divide(dv, dt_s) * F.lit(unit_s), 6)
                 grouped = staged.withColumn("_d", der).filter(F.col("_d").isNotNull())
                 if spec.tx == "non_negative_derivative":
                     grouped = grouped.filter(F.col("_d") >= 0)
@@ -4810,11 +4480,14 @@ class InfluxQLEngine:
         return grouped
 
 
-def _apply_slice(df: DataFrame, tkeys: list[str], stmt: SelectStmt) -> DataFrame:
+def _apply_slice(
+    df: DataFrame, tkeys: list[str], stmt: SelectStmt, tiebreak: tuple[str, ...] = ()
+) -> DataFrame:
     """LIMIT/OFFSET. Under GROUP BY <tag>, InfluxDB applies them PER
     SERIES (the reference strips LIMIT wholesale, cflux.js:689; round 1
     skipped it when grouping by tags) — a rank within each tag
-    combination, ordered like the output, does it distributed."""
+    combination, ordered like the output (time, then ``tiebreak``),
+    does it distributed. Ungrouped, ``df`` must already be ordered."""
     if not (stmt.limit or stmt.offset):
         return df
     if not tkeys:
@@ -4826,7 +4499,7 @@ def _apply_slice(df: DataFrame, tkeys: list[str], stmt: SelectStmt) -> DataFrame
     from pyspark.sql import Window
 
     order = F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms").asc()
-    rn = F.row_number().over(Window.partitionBy(*tkeys).orderBy(order))
+    rn = F.row_number().over(Window.partitionBy(*tkeys).orderBy(order, *tiebreak))
     lo = stmt.offset or 0
     cond = F.col("_rn") > lo
     if stmt.limit:
@@ -4834,140 +4507,57 @@ def _apply_slice(df: DataFrame, tkeys: list[str], stmt: SelectStmt) -> DataFrame
     return df.withColumn("_rn", rn).filter(cond).drop("_rn")
 
 
-def _tag_series(rows, gtags, tkeys, stmt, colname, to_value) -> list[dict]:
-    """Partition collected rows into one series per tag combination
-    (InfluxDB GROUP BY <tag> emits a tagged series each). ``colname``
-    may be a list for multi-column rows (raw multi-field selects).
-    Zero rows → zero series (round 6): InfluxDB and the reference's
-    pivot (cflux.js:792-810) both omit the series object entirely for
-    empty results — a values:[] stub is a shape clients never see."""
-    cols = ["time"] + (colname if isinstance(colname, list) else [colname])
-    if not gtags:
-        if not rows:
-            return []
-        return [_series(stmt.measurement, cols, [to_value(r) for r in rows])]
+def _order_and_slice(
+    df: DataFrame, tkeys: list[str], stmt: SelectStmt, tiebreak: tuple[str, ...]
+) -> DataFrame:
+    """A result frame's final row order — series, then time per ORDER
+    BY, then ``tiebreak`` — with LIMIT/OFFSET applied per series."""
+    order = [*tkeys, F.col("ts_ms").desc() if stmt.order_desc else F.col("ts_ms"), *tiebreak]
+    if tkeys:
+        return _apply_slice(df, tkeys, stmt, tiebreak).orderBy(*order)
+    return _apply_slice(df.orderBy(*order), [], stmt)
+
+
+def _plan_series(plan: _SelectPlan, rows: list) -> list[dict]:
+    """Cut a result frame's rows into one series per tag combination
+    (InfluxDB GROUP BY <tag> emits a tagged series each). Zero rows →
+    zero series: InfluxDB and the reference's pivot
+    (cflux.js:792-810) both omit the series object entirely for empty
+    results — a values:[] stub is a shape clients never see. String
+    values that parse as numbers become floats (string-over-float,
+    cflux.js:795)."""
+    cols = ["time", *plan.columns]
+    vcols = [f"_v{i}" for i in range(len(plan.columns))]
+
+    def values(r) -> list:
+        return [
+            r["ts_ms"],
+            *(pivot_ops._maybe_float(v) if isinstance(v, str) else v for v in (r[c] for c in vcols)),
+        ]
+
+    if not plan.gtags:
+        return [_series(plan.name, cols, [values(r) for r in rows])] if rows else []
     buckets: dict[tuple, list] = {}
     for r in rows:
-        key = tuple(getattr(r, k) for k in tkeys)
-        buckets.setdefault(key, []).append(to_value(r))
+        buckets.setdefault(tuple(r[k] for k in plan.tkeys), []).append(values(r))
     out = []
     for key in sorted(buckets, key=lambda k: tuple(str(x) for x in k)):
-        s = _series(stmt.measurement, cols, buckets[key])
-        s["tags"] = {t: key[i] for i, t in enumerate(gtags)}
+        s = _series(plan.name, cols, buckets[key])
+        s["tags"] = dict(zip(plan.gtags, key))
         out.append(s)
     return out
 
 
 def _dedup_names(names: list[str]) -> list[str]:
     """Suffix repeated output column names _1, _2 ... in statement
-    order (InfluxDB 1.x duplicate-column rule)."""
+    order (InfluxDB 1.x duplicate-column rule: ``SELECT mean(v),
+    mean(v)`` returns columns [time, mean, mean_1])."""
     seen: dict[str, int] = {}
     out = []
     for c in names:
         k = seen.get(c, 0)
         seen[c] = k + 1
         out.append(c if k == 0 else f"{c}_{k}")
-    return out
-
-
-def _dedup_statement_columns(series: list[dict]) -> list[dict]:
-    """InfluxDB 1.x disambiguates duplicate SELECT output columns by
-    suffixing later occurrences (_1, _2, ...) — ``SELECT mean(v),
-    mean(v)`` returns columns [time, mean, mean_1]. The engine builds
-    per-field series spec-by-spec, so within one (measurement, tag
-    set) group a repeated column name means a repeated statement
-    column: rename in order of appearance (round 7 — previously two
-    same-named fields either bypassed the column merge, emitting two
-    ambiguous same-named series, or collided on one merge slot)."""
-    counts: dict[tuple, dict[str, int]] = {}
-    for se in series:
-        cols = se.get("columns") or []
-        if len(cols) != 2:
-            continue
-        key = (se.get("name"), tuple(sorted((se.get("tags") or {}).items())))
-        c = counts.setdefault(key, {})
-        n = c.get(cols[1], 0)
-        c[cols[1]] = n + 1
-        if n:
-            se["columns"] = [cols[0], f"{cols[1]}_{n}"]
-    return series
-
-
-def _merge_series_columns(
-    series: list[dict],
-    order_desc: bool,
-    limit: int | None,
-    offset: int | None = None,
-    slice_unmerged: bool = False,
-) -> list[dict]:
-    """InfluxDB 1.x merges a multi-field SELECT into ONE series per
-    (measurement, tag set) with columns [time, f1, f2, ...] aligned on
-    timestamp (null where a field has no point) — the engine builds
-    per-field series internally, so this driver-side pass merges them
-    at the envelope boundary (round 5; previously the envelope carried
-    one series per field, which Grafana table panels render as
-    separate frames). Only 2-column (time, value) series merge;
-    duplicate timestamps within a field occupy successive row slots so
-    no point is lost. LIMIT/OFFSET apply to the MERGED rows (round-6
-    ADVICE: InfluxDB counts merged points, not per-field points —
-    _select_series defers its per-field slice here; the subquery path
-    slices internally so only LIMIT re-caps, idempotently).
-
-    Every tag group expands onto the GLOBAL column grid — the ordered
-    union of value columns across all groups (round 6): InfluxDB's
-    column set is statement-derived, so a series whose tag combination
-    has data for only one field still carries every column (nulls in
-    the rest), exactly like the chunked path's full-outer join — a
-    13-shape sweep pins the two paths equal. Wider series (raw
-    multi-field, already merged and sliced in the distributed plan)
-    pass through untouched."""
-    all_cols: list[str] = []
-    for se in series:
-        if len(se.get("columns", [])) == 2 and se["columns"][1] not in all_cols:
-            all_cols.append(se["columns"][1])
-    groups: dict[tuple, list[dict]] = {}
-    order: list[tuple] = []
-    for se in series:
-        key = (se.get("name"), tuple(sorted((se.get("tags") or {}).items())))
-        if key not in groups:
-            order.append(key)
-        groups.setdefault(key, []).append(se)
-    out: list[dict] = []
-    idx = {c: i for i, c in enumerate(all_cols)}
-    for key in order:
-        ses = groups[key]
-        two = [se for se in ses if len(se.get("columns", [])) == 2]
-        out.extend(se for se in ses if len(se.get("columns", [])) != 2)
-        if not two:
-            continue
-        if len(all_cols) <= 1:
-            # effectively single-column output: nothing to merge
-            for se in two:
-                if slice_unmerged:
-                    se = dict(se)
-                    se["values"] = _slice_values(se["values"], limit, offset)
-                out.append(se)
-            continue
-        slots: dict = {}
-        for se in two:
-            ci = idx[se["columns"][1]]
-            seen: dict = {}
-            for ts, v in se["values"]:
-                k = seen.get(ts, 0)
-                seen[ts] = k + 1
-                rows = slots.setdefault(ts, [])
-                while len(rows) <= k:
-                    rows.append([None] * len(all_cols))
-                rows[k][ci] = v
-        values: list[list] = []
-        for ts in sorted(slots, reverse=order_desc):
-            for row in slots[ts]:
-                values.append([ts, *row])
-        values = _slice_values(values, limit, offset)
-        merged = dict(two[0])
-        merged["columns"] = ["time"] + all_cols
-        merged["values"] = values
-        out.append(merged)
     return out
 
 

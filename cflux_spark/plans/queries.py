@@ -599,7 +599,7 @@ def q_cumulative_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_elapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """InfluxQL elapsed(): integer ms between consecutive points of a
-    series (plans/influxql.py _elapsed_series; no reference analog —
+    series (plans/influxql.py _elapsed_frame; no reference analog —
     cFlux delegates all point math to Kapacitor). Exact: epoch-ms longs
     subtract without float intermediates."""
     from pyspark.sql import Window
@@ -1173,7 +1173,7 @@ def q_top_per_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """InfluxQL top(f, 3) under GROUP BY time(1h): the 3 actual points
     per (series-group, bucket), keeping their own identity — a ranked
     selector, not a folded aggregate (plans/influxql.py
-    _selector_series). Ties break toward the earlier point, then
+    _selector_frame). Ties break toward the earlier point, then
     event_id, so ranks are deterministic on both engines."""
     from pyspark.sql import Window
 
@@ -1215,7 +1215,7 @@ def q_subquery_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     time(1m), type) WHERE mean_v > 0.5 GROUP BY type`` — the WHERE
     outside the subquery filters the subquery's OUTPUT rows, then the
     outer aggregate re-folds what survives (plans/influxql.py
-    _filter_subquery_output + _select_subquery; the reference has no
+    _filter_subquery_output + _subquery_plan; the reference has no
     subqueries at all — cflux.js:687-833 parses a single SELECT).
     Mechanically: inner bucketed agg shuffle -> codegen filter ->
     outer agg shuffle, one Catalyst plan, nothing collected between

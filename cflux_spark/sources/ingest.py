@@ -252,29 +252,19 @@ class LPStore:
         lines: DataFrame,
         default_ts_ns: int = 0,
         collect_stats: bool = True,
-        backfill: bool = False,
         precision: str = "ns",
     ) -> dict[str, int]:
-        """Ingest a batch of LP lines.
-
-        `backfill=True` switches the facts write from
-        ``repartition("date")`` (one task per date — right for
-        micro-batches spanning 1-2 dates) to
-        ``repartitionByRange(parallelism, date, fingerprint)`` so a
-        historical load spanning hundreds of dates parallelizes across
-        the cluster instead of serializing per date (SCALE.md)."""
+        """Ingest a batch of LP lines."""
         # cache the PARSED frame (one Python-parse pass); the JVM-side
         # explode/fingerprint downstream is cheap to recompute for the
         # facts and registry consumers.
         parsed = parse_lp_df(lines, default_ts_ns, precision=precision).cache()
         try:
-            return self._append_exploded(explode_fields(parsed), backfill, collect_stats)
+            return self._append_exploded(explode_fields(parsed), collect_stats)
         finally:
             parsed.unpersist()
 
-    def _append_exploded(
-        self, exploded: DataFrame, backfill: bool = False, collect_stats: bool = True
-    ) -> dict[str, int]:
+    def _append_exploded(self, exploded: DataFrame, collect_stats: bool = True) -> dict[str, int]:
         """Append facts + new-series registry rows from an identity-
         attached frame (the shared tail of batch ingest and
         SELECT INTO)."""
@@ -282,13 +272,9 @@ class LPStore:
         # sortWithinPartitions(fingerprint, ts) mirrors the MergeTree
         # ORDER BY (cflux.js:152): parquet row-group min/max stats then
         # skip on fingerprint/time predicates at read.
-        if backfill:
-            par = self.spark.sparkContext.defaultParallelism
-            distributed = facts.repartitionByRange(par, "date", "fingerprint")
-        else:
-            distributed = facts.repartition("date")
         (
-            distributed.sortWithinPartitions("fingerprint", "ts")
+            facts.repartition("date")
+            .sortWithinPartitions("fingerprint", "ts")
             .write.mode("append")
             .partitionBy("date")
             .parquet(self.samples_path)

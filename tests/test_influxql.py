@@ -302,6 +302,16 @@ def test_from_regex_measurement(engine):
     # both 'app' and 'cpu' match /p/, but app has no user field —
     # empty results omit the series (InfluxDB envelope shape, round 6)
     assert {s["name"] for s in res2["results"][0]["series"]} == {"cpu"}
+    # a wildcard expands over the field keys of EVERY matched
+    # measurement: each series carries the same columns
+    for q in ("SELECT * FROM /^(app|cpu)$/", "SELECT mean(*) FROM /^(app|cpu)$/ GROUP BY time(1m)"):
+        series = engine.execute(q, db="mydb")["results"][0]["series"]
+        assert [s["name"] for s in series] == ["app", "cpu"]
+        assert len({tuple(s["columns"]) for s in series}) == 1
+    app, cpu = engine.execute("SELECT * FROM /^(app|cpu)$/", db="mydb")["results"][0]["series"]
+    assert app["columns"] == ["time", "status", "sys", "user"]
+    assert app["values"] == [[1704067200000, "ok", None, None]]
+    assert cpu["values"][0][1] is None  # no status on cpu points
 
 
 def test_group_by_star(engine):
@@ -1262,8 +1272,7 @@ def test_chunked_select_star_expands_wildcard(engine):
         "SELECT mean(user) FROM cpu GROUP BY time(60s), host",
         "SELECT mean(user), mean(sys) FROM cpu GROUP BY time(60s), host",
         "SELECT mean(user), mean(sys) FROM cpu GROUP BY time(60s) ORDER BY time DESC",
-        # round 7: lone ungrouped selectors (original-timestamp point;
-        # chunked falls back to one envelope — must still be equal)
+        # lone ungrouped selectors (original-timestamp point)
         "SELECT max(user) FROM cpu",
         "SELECT first(user) FROM cpu GROUP BY host",
         "SELECT last(user) FROM cpu",
@@ -1285,10 +1294,8 @@ def test_chunked_select_star_expands_wildcard(engine):
         "SELECT exponential_moving_average(mean(user), 3), mean(user) "
         "FROM cpu GROUP BY time(60s)",
         "SELECT holt_winters(mean(user), 3, 0) FROM cpu GROUP BY time(60s)",
-        # round 7: single-field subquery statements STREAM through the
-        # pump (raw re-selection / HAVING / transform / outer agg /
-        # arithmetic over outputs); multi-field falls back — equal
-        # either way
+        # subquery statements (raw re-selection / HAVING / transform /
+        # outer agg / arithmetic over outputs)
         "SELECT max FROM (SELECT max(user) FROM cpu GROUP BY time(60s))",
         "SELECT mean_v FROM (SELECT mean(user) AS mean_v FROM cpu "
         "GROUP BY time(60s), host) WHERE mean_v > 0.3",
@@ -1328,14 +1335,27 @@ def test_chunked_select_star_expands_wildcard(engine):
         "SELECT mean(user), mean(user) FROM cpu GROUP BY time(60s)",
         "SELECT exponential_moving_average(mean(user), 2), "
         "exponential_moving_average(mean(user), 4) FROM cpu GROUP BY time(60s)",
+        # multi-field shapes with explicit answers in
+        # test_multi_field_merge_shapes
+        "SELECT mean(user), mean(nosuch) FROM cpu GROUP BY time(60s)",
+        "SELECT elapsed(user), elapsed(sys) FROM cpu",
+        "SELECT distinct(user), distinct(sys) FROM cpu",
+        "SELECT top(user, 2), bottom(user, 2) FROM cpu",
+        "SELECT user * 2, sys FROM cpu",
+        "SELECT acos(user), abs(sys) FROM cpu",
+        "SELECT mx, c FROM (SELECT max(user) AS mx, count(user) AS c FROM cpu "
+        "GROUP BY time(60s), host)",
+        "SELECT count(mx) FROM (SELECT mx, c FROM (SELECT max(user) AS mx, "
+        "count(user) AS c FROM cpu GROUP BY time(60s), host))",
+        # FROM /regex/ streams one frame per matching measurement
+        "SELECT * FROM /^(cpu|app)$/",
     ],
 )
 def test_chunked_equals_unchunked_sweep(engine, q):
-    """Conformance sweep (round 6): for every chunkable statement
-    shape, the concatenation of chunked envelopes must equal the
-    unchunked result — same columns, same merged series, same values.
-    This is the property the round-6 ADVICE finding violated (chunked
-    multi-field emitted per-field series) generalized into a fence."""
+    """Conformance sweep: for every statement shape, the concatenation
+    of chunked envelopes must equal the unchunked result — same
+    columns, same merged series, same values. Both drains run one
+    planner's frames, so this fences the drains, not two planners."""
     unchunked = engine.execute(q, db="mydb")
     envs = list(engine.execute_chunked(q, db="mydb", chunk_size=2))
     useries = unchunked["results"][0].get("series", [])
@@ -2573,6 +2593,108 @@ def test_multi_field_raw_group_by_tag(engine):
     assert by_host["b"]["values"] == [[1704067200000, 0.7, None]]
 
 
+def test_multi_field_merge_shapes(engine):
+    """Multi-field statements merge in the engine into one series per
+    tag set whose columns are the statement's fields: a field that
+    matched nothing keeps its (null) column, and fields that repeat a
+    time pair by row slot — the k-th value at a time (value order)
+    on row k — so every value lands once, in a deterministic row."""
+
+    def series(q):
+        return engine.execute(q, db="mydb")["results"][0]["series"]
+
+    (s,) = series("SELECT mean(user), mean(nosuch) FROM cpu GROUP BY time(60s)")
+    assert s["columns"] == ["time", "mean_user", "mean_nosuch"]
+    assert s["values"] == [[1704067200000, 0.366667, None], [1704067260000, 0.5, None]]
+    # sys has one point in the merged series: no gap, so no elapsed
+    # value, but the column stays
+    (s,) = series("SELECT elapsed(user), elapsed(sys) FROM cpu")
+    assert s["columns"] == ["time", "elapsed_user", "elapsed_sys"]
+    assert s["values"] == [
+        [1704067200000, 0, None],  # hosts a and b share :00
+        [1704067230000, 30_000_000_000, None],
+        [1704067290000, 60_000_000_000, None],
+    ]
+    (s,) = series("SELECT distinct(user), distinct(sys) FROM cpu")
+    assert s["columns"] == ["time", "distinct_user", "distinct_sys"]
+    assert s["values"] == [[0, 0.1, 0.01], [0, 0.3, None], [0, 0.5, None], [0, 0.7, None]]
+    (s,) = series("SELECT top(user, 2), bottom(user, 2) FROM cpu")
+    assert s["columns"] == ["time", "top_user", "bottom_user"]
+    assert s["values"] == [
+        [1704067200000, 0.7, 0.1],
+        [1704067230000, None, 0.3],
+        [1704067290000, 0.5, None],
+    ]
+    # raw arithmetic aligns on point identity like a raw field: host
+    # a's :00 point carries sys, host b's does not
+    (s,) = series("SELECT user * 2, sys FROM cpu")
+    assert s["columns"] == ["time", "user", "sys"]  # InfluxDB names it by its field
+    assert s["values"] == [
+        [1704067200000, 0.2, 0.01],
+        [1704067200000, 1.4, None],
+        [1704067230000, 0.6, None],
+        [1704067290000, 1.0, None],
+    ]
+    # math over a field is pointwise too: same point pairing (acos
+    # reverses the value order, so host b's row comes first at :00)
+    (s,) = series("SELECT acos(user), abs(sys) FROM cpu")
+    assert s["columns"] == ["time", "acos_user", "abs_sys"]
+    assert s["values"] == [
+        [1704067200000, 0.795399, None],
+        [1704067200000, 1.470629, 0.01],
+        [1704067230000, 1.266104, None],
+        [1704067290000, 1.047198, None],
+    ]
+    (s,) = series("SELECT user, abs(sys) FROM cpu WHERE host = 'a'")
+    assert s["columns"] == ["time", "user", "abs_sys"]
+    assert s["values"][0] == [1704067200000, 0.1, 0.01]
+    # re-selections over a subquery keep its rows: (max, count) of
+    # host a and of host b at :00 stay paired
+    (s,) = series(
+        "SELECT mx, c FROM (SELECT max(user) AS mx, count(user) AS c FROM cpu "
+        "GROUP BY time(60s), host)"
+    )
+    assert s["columns"] == ["time", "mx", "c"]
+    assert s["values"] == [
+        [1704067200000, 0.3, 2],
+        [1704067200000, 0.7, 1],
+        [1704067260000, 0.5, 1],
+    ]
+    # ... at a middle nesting level too (a (time)-keyed join there
+    # would cross the two :00 rows into four)
+    (s,) = series(
+        "SELECT count(mx) FROM (SELECT mx, c FROM (SELECT max(user) AS mx, "
+        "count(user) AS c FROM cpu GROUP BY time(60s), host))"
+    )
+    assert s["values"] == [[1704067200000, 2], [1704067260000, 1]]
+
+
+@pytest.mark.parametrize("chunked", [False, True])
+def test_derivative_skips_zero_time_step(engine, chunked):
+    """Two series merged at one timestamp (hosts a and b at :00) give
+    an ungrouped derivative a zero time step; InfluxDB skips that
+    point instead of dividing by zero (an ANSI DIVIDE_BY_ZERO error
+    before)."""
+
+    def values(q):
+        if chunked:
+            envs = list(engine.execute_chunked(q, db="mydb", chunk_size=1))
+        else:
+            envs = [engine.execute(q, db="mydb")]
+        return [v for e in envs for s in e["results"][0].get("series", []) for v in s["values"]]
+
+    raw = values("SELECT derivative(user) FROM cpu")
+    assert all(v[0] != 1704067200000 for v in raw)
+    assert raw[-1] == [1704067290000, 0.003333]  # (0.5 - 0.3) / 60 s
+    nn = values("SELECT non_negative_derivative(user) FROM cpu")
+    assert nn[-1] == [1704067290000, 0.003333]
+    bucketed = values(
+        "SELECT derivative(mean_v) FROM (SELECT mean(user) AS mean_v FROM cpu "
+        "GROUP BY time(60s), host)"
+    )
+    assert len(bucketed) == 1 and bucketed[0][0] == 1704067260000
+
+
 def test_mixing_aggregate_and_raw_fields_rejects_loudly(engine):
     """InfluxDB 1.x refuses 'mixing aggregate and non-aggregate
     queries'; a silent timestamp-merge of a raw point stream with a
@@ -2581,6 +2703,8 @@ def test_mixing_aggregate_and_raw_fields_rejects_loudly(engine):
         engine.execute("SELECT user, mean(sys) FROM cpu", db="mydb")
     with pytest.raises(InfluxQLError, match="mixing aggregate and non-aggregate"):
         engine.execute("SELECT mean(user), sys FROM cpu GROUP BY time(60s)", db="mydb")
+    with pytest.raises(InfluxQLError, match="mixing aggregate and non-aggregate"):
+        engine.execute("SELECT abs(user), mean(sys) FROM cpu", db="mydb")
 
 
 def test_show_family_where_with_limit(engine):
@@ -2680,6 +2804,16 @@ def test_multi_field_limit_offset_counts_merged_rows(spark, tmp_path):
         "SELECT mean(user), mean(sys) FROM cpu GROUP BY time(60s) OFFSET 3", db="mdb"
     )
     assert r["results"][0]["series"][0]["values"] == [[1704067380000, None, 4.0]]
+    # ORDER BY time DESC orders the merged rows before they are counted
+    r = eng.execute(
+        "SELECT mean(user), mean(sys) FROM cpu GROUP BY time(60s) "
+        "ORDER BY time DESC LIMIT 2 OFFSET 1",
+        db="mdb",
+    )
+    assert r["results"][0]["series"][0]["values"] == [
+        [1704067320000, 3.0, None],
+        [1704067260000, None, 2.0],
+    ]
 
 
 def test_delete_from_regex(spark, tmp_path):
@@ -2882,7 +3016,7 @@ def test_ungrouped_selector_returns_original_point(engine):
     # GROUP BY time keeps the bucketed fold (bucket-start timestamps)
     res = engine.execute("SELECT max(user) FROM cpu GROUP BY time(60s)", db="mydb")
     assert _values(res) == [[1704067200000, 0.7], [1704067260000, 0.5]]
-    # chunked dispatch falls back to the same single envelope
+    # chunked=true streams the same single point
     chunks = list(engine.execute_chunked("SELECT max(user) FROM cpu", db="mydb"))
     assert len(chunks) == 1
     assert _values(chunks[0]) == [[1704067200000, 0.7]]
@@ -3199,10 +3333,11 @@ def test_explain_select_returns_catalyst_plan(engine):
     plan = "\n".join(v[0] for v in s["values"])
     assert "Physical Plan" in plan or "HashAggregate" in plan
     assert "parquet" in plan.lower()
-    # multi-field statements label one plan per field frame
+    # a multi-field statement merges its fields in the engine, so it
+    # explains as ONE plan — the same one chunked=true explains
     res2 = engine.execute("EXPLAIN SELECT mean(user), max(sys) FROM cpu", db="mydb")
     plan2 = "\n".join(v[0] for v in res2["results"][0]["series"][0]["values"])
-    assert "frame 1/" in plan2
+    assert "frame 1/" not in plan2 and "Physical Plan" in plan2
     # a capped engine must not trip its row guard while explaining,
     # and a normal SELECT afterwards still executes (capture mode off)
     capped = InfluxQLEngine(engine.spark, engine.root, max_result_rows=1)
@@ -3257,26 +3392,23 @@ def test_explain_bare_and_near_miss_raise_influxql_error(engine):
 
 
 def test_explain_chunked_captures_pump_frames(spark, tmp_path):
-    """EXPLAIN + chunked=true (round 10): the chunked dispatch's own
-    per-spec frames are captured at the chunk pump's would-have-
-    executed point; nothing streams, nothing writes, and a statement
-    the chunked path serves as one ordinary envelope still explains."""
+    """EXPLAIN + chunked=true answers with one explain envelope of the
+    frames the chunked drain would stream — the same frames plain
+    EXPLAIN captures, since both drains share one planner; nothing
+    streams, nothing writes, and a statement the chunked path serves
+    as one ordinary envelope still explains."""
     root = str(tmp_path / "explchunk")
     store = LPStore(spark, root, db="mydb")
     store.write_batch(spark.createDataFrame([(l,) for l in LINES], "line string"))
     eng = InfluxQLEngine(spark, root)
-    # raw-point statement → streams through _select_raw_chunked
     envs = list(eng.execute_chunked("EXPLAIN SELECT user FROM cpu", db="mydb"))
     assert len(envs) == 1  # one explain envelope, not row chunks
     s = envs[0]["results"][0]["series"][0]
     assert s["columns"] == ["QUERY PLAN"]
     plan = "\n".join(v[0] for v in s["values"])
     assert "parquet" in plan.lower()
-    # multi-field aggregate → _select_agg_chunked streams ONE merged
-    # bucket-aligned frame (per-spec frames full-outer-joined), so the
-    # chunked EXPLAIN shows a single plan — unlike the unchunked path's
-    # one-plan-per-field — which is exactly the fidelity the feature is
-    # for: the plan the statement would really get under chunked=true
+    # multi-field aggregate → ONE merged bucket-aligned frame
+    # (per-field frames full-outer-joined), so a single plan
     envs2 = list(
         eng.execute_chunked(
             "EXPLAIN SELECT mean(user), max(sys) FROM cpu GROUP BY time(60s)",
@@ -3285,8 +3417,8 @@ def test_explain_chunked_captures_pump_frames(spark, tmp_path):
     )
     plan2 = "\n".join(v[0] for v in envs2[0]["results"][0]["series"][0]["values"])
     assert "frame 1/" not in plan2 and "Physical Plan" in plan2
-    # a non-chunkable statement (SLIMIT) falls back to the unchunked
-    # envelope path and still explains through _bounded_collect
+    # SLIMIT answers with one envelope under chunked=true; it still
+    # explains
     envs3 = list(
         eng.execute_chunked("EXPLAIN SELECT user FROM cpu SLIMIT 1", db="mydb")
     )

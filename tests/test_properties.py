@@ -182,66 +182,6 @@ def test_split_on_word_conserves_characters(s):
     assert sum(len(g) for g in got) <= len(s)
 
 
-# ------------------------------------------------- multi-field merge
-
-from cflux_spark.plans.influxql import _merge_series_columns  # noqa: E402
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    data=st.dictionaries(
-        st.sampled_from(["f1", "f2", "f3"]),
-        st.lists(
-            st.tuples(st.integers(0, 5), st.integers(-9, 9)), min_size=0, max_size=6
-        ),
-        min_size=1,
-        max_size=3,
-    ),
-    desc=st.booleans(),
-    limit=st.one_of(st.none(), st.integers(1, 8)),
-    offset=st.one_of(st.none(), st.integers(0, 4)),
-)
-def test_merge_series_grid_conserves_values(data, desc, limit, offset):
-    """Property: merging per-field 2-col series onto the statement
-    grid (a) keeps columns = time + ordered union of value columns,
-    (b) places every input value in its own column slot exactly once
-    (before slicing), (c) orders rows by time per ORDER BY, and
-    (d) applies OFFSET/LIMIT to the MERGED rows."""
-    # per-field series arrive time-ordered from the engine (each frame
-    # is orderBy'd before collect) — the generator honors the invariant
-    series = [
-        {
-            "name": "m",
-            "columns": ["time", f],
-            "values": [[t, v] for t, v in sorted(pts, key=lambda p: p[0], reverse=desc)],
-        }
-        for f, pts in data.items()
-        if pts
-    ]
-    if not series:
-        return
-    fields = [s["columns"][1] for s in series]
-    out = _merge_series_columns(
-        [dict(s) for s in series], desc, limit, offset, slice_unmerged=True
-    )
-    assert len(out) == 1
-    se = out[0]
-    if len(fields) == 1:
-        assert se["columns"] == ["time", fields[0]]
-    else:
-        assert se["columns"] == ["time"] + fields
-    # rebuild the unsliced merged grid independently
-    full = _merge_series_columns([dict(s) for s in series], desc, None, None, True)[0]
-    n_in = sum(len(s["values"]) for s in series)
-    n_cells = sum(1 for row in full["values"] for v in row[1:] if v is not None)
-    assert n_cells == n_in  # every value lands exactly once
-    ts = [row[0] for row in full["values"]]
-    assert ts == sorted(ts, reverse=desc)
-    lo = offset or 0
-    hi = lo + limit if limit is not None else None
-    assert se["values"] == full["values"][lo:hi]
-
-
 # ------------------------------------------------ behavioral identities
 # The round-12 behavioral operators rest on three closed-form
 # identities (extensions/behavior.py, extensions/stats.py). The Spark

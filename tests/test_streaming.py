@@ -93,24 +93,6 @@ def test_compact_preserves_data(spark, tmp_path):
     assert after_files < before_files
 
 
-def test_backfill_write_mode(spark, tmp_path):
-    """Backfill mode spreads a multi-date load across tasks and
-    produces identical data to the micro-batch path."""
-    lines_list = [
-        (f"m,host=h{j} v={d}.{j} {(1704067200 + d * 86400) * 10**9}",)
-        for d in range(6)  # several distinct dates
-        for j in range(3)
-    ]
-    a = LPStore(spark, str(tmp_path / "a"), db="x")
-    b = LPStore(spark, str(tmp_path / "b"), db="x")
-    df = spark.createDataFrame(lines_list, "line string")
-    a.write_batch(df, collect_stats=False)
-    b.write_batch(df, collect_stats=False, backfill=True)
-    ra = sorted(tuple(r) for r in a.read_samples().collect())
-    rb = sorted(tuple(r) for r in b.read_samples().collect())
-    assert ra == rb and len(ra) == len(lines_list)
-
-
 def test_compact_crash_recovery(spark, tmp_path):
     """A crash at any point mid-compact leaves a state the next store
     construction repairs, with the data intact."""
